@@ -165,12 +165,7 @@ def pagerank(
         res = res.drop("__warm_rank__")
     # the final state is its own checkpoint; free the materialized vertex
     # table (safe: lineage was severed at every superstep)
-    vrdd = getattr(g.vertices, "_ck_rdd", None)
-    if vrdd is not None:
-        try:
-            vrdd.unpersist(False)
-        except Exception:
-            pass
+    _free_checkpoint(g.vertices)
     # expose per-superstep metrics to benchmarks (supersteps/hour is the
     # BASELINE.json north metric); plain Python attribute on the DataFrame
     res.pregel_metrics = engine.metrics
@@ -278,9 +273,10 @@ def connected_components_star(
 
     Per round: 2 groupBy + 2 equi-joins + a distinct — all shuffle on
     vertex ids, no driver-side data.  Convergence is detected by an O(1)
-    (count, bit_xor of row hashes) signature of the edge set — one tiny
-    action per round, O(log n) rounds total vs O(diameter) supersteps for
-    min-label (a 10^8-long chain needs ~27 rounds here, 10^8 there).
+    (count, bit_xor of row hashes) signature of the edge set, observed on
+    the round's own materializing job — no extra action; O(log n) rounds
+    total vs O(diameter) supersteps for min-label (a 10^8-long chain needs
+    ~27 rounds here, 10^8 there).
 
     Returns ``(vertex_id, …props, component)`` — identical output contract
     and values (component = min vertex id) as method="label".
@@ -327,20 +323,12 @@ def connected_components_star(
             .select(F.col("nx").alias("x"), F.col("nc").alias("c"))
             .distinct()
         )
-        nxt = truncate_plan(nxt)
-        sig_row = nxt.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(x, c))").alias("h"),
-        ).collect()[0]
-        sig = (sig_row["n"], sig_row["h"])
-        prev = E
+        nxt = truncate_plan(
+            nxt, observe={"h": F.expr("bit_xor(xxhash64(x, c))")}
+        )
+        sig = (nxt.observed["rows"], nxt.observed["h"])
+        _free_checkpoint(E)
         E = nxt
-        prev_rdd = getattr(prev, "_ck_rdd", None)
-        if prev_rdd is not None:
-            try:
-                prev_rdd.unpersist(False)
-            except Exception:
-                pass
         if sig == prev_sig:
             break
         prev_sig = sig
@@ -415,14 +403,8 @@ def label_propagation(
                 F.coalesce(F.col("new_label"), F.col("label")).alias("label"),
             )
             nxt = truncate_plan(nxt)
-            prev = labels
+            _free_checkpoint(labels)
             labels = nxt
-            prev_rdd = getattr(prev, "_ck_rdd", None)
-            if prev_rdd is not None:
-                try:
-                    prev_rdd.unpersist(False)
-                except Exception:
-                    pass
     finally:
         sym.unpersist()
     return labels
@@ -655,12 +637,7 @@ def personalized_pagerank(
             ),
         )
     res = builder.build().run()
-    vrdd = getattr(g.vertices, "_ck_rdd", None)
-    if vrdd is not None:
-        try:
-            vrdd.unpersist(False)
-        except Exception:
-            pass
+    _free_checkpoint(g.vertices)
     return res
 
 
@@ -779,22 +756,14 @@ def strongly_connected_components(
         .filter(F.col(SUBJECT) != F.col(OBJECT))
         .distinct()
     )
-    active_v = truncate_plan(ids)
+    active_v = truncate_plan(ids, observe={})
     active_e = edges0
     assigned = None
-
-    def _free(df) -> None:
-        rdd = getattr(df, "_ck_rdd", None)
-        if rdd is not None:
-            try:
-                rdd.unpersist(False)
-            except Exception:
-                pass
 
     rounds = 0
     while rounds < max_rounds:
         rounds += 1
-        if active_v.limit(1).count() == 0:
+        if active_v.observed["rows"] == 0:
             break
         # edges of the live subgraph (both endpoints unassigned)
         e_act = (
@@ -849,13 +818,13 @@ def strongly_connected_components(
         )
         new_assigned = truncate_plan(new_assigned)
         new_active = truncate_plan(
-            active_v.join(done.select(VERTEX_ID), VERTEX_ID, "left_anti")
+            active_v.join(done.select(VERTEX_ID), VERTEX_ID, "left_anti"),
+            observe={},
         )
-        for df in (active_v, colors):
-            _free(df)
+        for df in (active_v, colors, e_act):
+            _free_checkpoint(df)
         if assigned is not None:
-            _free(assigned)
-        _free(e_act)
+            _free_checkpoint(assigned)
         assigned, active_v = new_assigned, new_active
         active_e = edges0
     else:
@@ -870,7 +839,7 @@ def strongly_connected_components(
             "component", F.col(VERTEX_ID)
         ).limit(0)
     res = graph.vertices.join(assigned, VERTEX_ID, "inner")
-    _free(active_v)
+    _free_checkpoint(active_v)
     return res
 
 
@@ -908,15 +877,7 @@ def k_core(
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    und = truncate_plan(und)
-
-    def _free(df) -> None:
-        rdd = getattr(df, "_ck_rdd", None)
-        if rdd is not None:
-            try:
-                rdd.unpersist(False)
-            except Exception:
-                pass
+    und = truncate_plan(und, observe={})
 
     def _degrees(e: DataFrame) -> DataFrame:
         return (
@@ -938,20 +899,19 @@ def k_core(
                 keep.select(F.col(VERTEX_ID).alias("b")), "b", "left_semi"
             )
         )
-        nxt = truncate_plan(nxt)
-        # one O(1) scalar per round; fixpoint when no edge was peeled
-        n_prev, n_now = und.count(), nxt.count()
-        _free(und)
+        # edge counts ride the materializing jobs; fixpoint when no edge
+        # was peeled
+        nxt = truncate_plan(nxt, observe={})
+        n_prev, n_now = und.observed["rows"], nxt.observed["rows"]
+        _free_checkpoint(und)
         und = nxt
-        if n_now == n_prev:
-            break
-        if n_now == 0:
+        if n_now == n_prev or n_now == 0:
             break
 
     # materialize the (small, O(V)) result BEFORE freeing the edge blocks it
     # reads — the returned frame is lazy and must not depend on them
     res = truncate_plan(_degrees(und).filter(F.col("degree") >= k))
-    _free(und)
+    _free_checkpoint(und)
     return res
 
 
@@ -974,7 +934,7 @@ def k_truss(
     edge can drop another edge's support, so the loop runs to fixpoint
     (or ``max_rounds`` — a bounded prefix is deterministic and is what
     the driver row verifies, mirroring ``kcore3_r2``).  Each round ends
-    in a ``truncate_plan`` materialization + an O(1) count action for the
+    in a ``truncate_plan`` materialization whose observed row count is the
     fixpoint test; previous-round blocks are freed.
 
     Returns the surviving canonical undirected edges with their support
@@ -982,15 +942,6 @@ def k_truss(
     """
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
-    from pregel_rs_spark.pregel import truncate_plan
-
-    def _free(df) -> None:
-        rdd = getattr(df, "_ck_rdd", None)
-        if rdd is not None:
-            try:
-                rdd.unpersist(False)
-            except Exception:
-                pass
 
     def _support(e: DataFrame) -> DataFrame:
         tris = _triangles_from_undirected(e)
@@ -1015,7 +966,8 @@ def k_truss(
             F.greatest(SUBJECT, OBJECT).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
-        .distinct()
+        .distinct(),
+        observe={},
     )
     rounds = 0
     while max_rounds is None or rounds < max_rounds:
@@ -1023,16 +975,17 @@ def k_truss(
         nxt = truncate_plan(
             _support(und)
             .filter(F.col("support") >= k - 2)
-            .select("a", "b")
+            .select("a", "b"),
+            observe={},
         )
-        n_prev, n_now = und.count(), nxt.count()
-        _free(und)
+        n_prev, n_now = und.observed["rows"], nxt.observed["rows"]
+        _free_checkpoint(und)
         und = nxt
         if n_now == n_prev or n_now == 0:
             break
 
     res = truncate_plan(_support(und))
-    _free(und)
+    _free_checkpoint(und)
     return res
 
 
@@ -1342,14 +1295,6 @@ def _hyperball_rounds(graph, k, log2m, portable):
     sketch = truncate_plan(sketch)
     yield sketch
 
-    def _free(df) -> None:
-        rdd = getattr(df, "_ck_rdd", None)
-        if rdd is not None:
-            try:
-                rdd.unpersist(False)
-            except Exception:
-                pass
-
     for _ in range(k):
         inc = edges.join(
             sketch, edges[OBJECT] == sketch[VERTEX_ID], "inner"
@@ -1362,7 +1307,7 @@ def _hyperball_rounds(graph, k, log2m, portable):
         )
         # the new table is materialized; the previous round's checkpoint
         # blocks are dead weight (consumers only ever read the latest)
-        _free(prev)
+        _free_checkpoint(prev)
         yield sketch
 
 
@@ -2323,12 +2268,7 @@ def trustrank(
             ),
         )
     res = builder.build().run()
-    vrdd = getattr(g.vertices, "_ck_rdd", None)
-    if vrdd is not None:
-        try:
-            vrdd.unpersist(False)
-        except Exception:
-            pass
+    _free_checkpoint(g.vertices)
     return res
 
 
@@ -2525,12 +2465,7 @@ def salsa(
         res = res.withColumn(
             "auth", F.col("auth") / F.lit(float(sa))
         ).withColumn("hub", F.col("hub") / F.lit(float(sh)))
-    vrdd = getattr(g.vertices, "_ck_rdd", None)
-    if vrdd is not None:
-        try:
-            vrdd.unpersist(False)
-        except Exception:
-            pass
+    _free_checkpoint(g.vertices)
     return res
 
 
@@ -2599,14 +2534,6 @@ def maximal_independent_set(
     mis = spark.createDataFrame([], "vertex_id long")
     excluded = spark.createDataFrame([], "vertex_id long")
 
-    def _free(df) -> None:
-        rdd = getattr(df, "_ck_rdd", None)
-        if rdd is not None:
-            try:
-                rdd.unpersist(False)
-            except Exception:
-                pass
-
     rounds = 0
     while max_rounds is None or rounds < max_rounds:
         rounds += 1
@@ -2649,14 +2576,14 @@ def maximal_independent_set(
         nxt = truncate_plan(
             undecided.join(winners, VERTEX_ID, "left_anti").join(
                 newly_excluded, VERTEX_ID, "left_anti"
-            )
+            ),
+            observe={},
         )
-        n_left = nxt.count()
-        _free(undecided)
-        _free(winners)
-        _free(newly_excluded)
+        _free_checkpoint(undecided)
+        _free_checkpoint(winners)
+        _free_checkpoint(newly_excluded)
         undecided = nxt
-        if n_left == 0:
+        if nxt.observed["rows"] == 0:
             break
 
     res = (
@@ -2668,7 +2595,7 @@ def maximal_independent_set(
     )
     res = truncate_plan(res)
     for df in (sym, mis, excluded, undecided):
-        _free(df)
+        _free_checkpoint(df)
     return res
 
 
@@ -2811,9 +2738,10 @@ def coreness(
     core), two hash aggs, one tiny window — all key-partitioned, no
     driver-side data; lineage truncated per round.
 
-    ``max_rounds=None`` iterates to the fixpoint (one O(1) convergence
-    action per round); a fixed ``max_rounds`` runs exactly that budget —
-    the deterministic prefix the driver-gate oracle unrolls in SQL.
+    ``max_rounds=None`` iterates to the fixpoint, tested on the coreness
+    sum each round's materializing job observes (no extra action); a fixed
+    ``max_rounds`` runs exactly that budget — the deterministic prefix the
+    driver-gate oracle unrolls in SQL.
 
     Returns ``(vertex_id, coreness)`` for every vertex with ≥ 1 edge
     (isolated vertices have coreness 0 and carry no rows here, matching
@@ -2826,10 +2754,14 @@ def coreness(
         F.col("a").alias(VERTEX_ID), F.col("b").alias("nbr")
     ).unionAll(und.select(F.col("b"), F.col("a")))
 
+    # a round never raises a vertex's coreness and keeps the vertex set, so
+    # an unchanged coreness sum means no vertex changed: the fixpoint test
+    total = {"total": F.sum("coreness")}
     core = truncate_plan(
         nbrs.groupBy(VERTEX_ID).agg(
             F.count(F.lit(1)).cast("long").alias("coreness")
-        )
+        ),
+        observe=total,
     )
 
     w = (
@@ -2860,25 +2792,14 @@ def coreness(
                 F.least(F.col("coreness"), F.col("h"))
                 .cast("long")
                 .alias("coreness"),
-            )
+            ),
+            observe=total,
         )
-        if max_rounds is None:
-            changed = (
-                nxt.join(
-                    core.select(
-                        VERTEX_ID, F.col("coreness").alias("prev")
-                    ),
-                    VERTEX_ID,
-                )
-                .filter(F.col("coreness") != F.col("prev"))
-                .count()
-            )
-            if changed == 0:
-                _free_checkpoint(core)
-                core = nxt
-                break
+        converged = nxt.observed == core.observed
         _free_checkpoint(core)
         core = nxt
+        if max_rounds is None and converged:
+            break
     return core
 
 
@@ -2939,8 +2860,8 @@ def landmark_distances(
                 "left_anti",
             )
         )
-        nxt = truncate_plan(nxt)
-        if nxt.isEmpty():
+        nxt = truncate_plan(nxt, observe={})
+        if nxt.observed["rows"] == 0:
             _free_checkpoint(nxt)
             break
         new_settled = truncate_plan(settled.unionByName(nxt))
@@ -2997,11 +2918,11 @@ def maximal_matching(
         .distinct()
         .withColumn("pri", _edge_priority(F.col("a"), F.col("b")))
     )
-    und = truncate_plan(und)
+    und = truncate_plan(und, observe={})
     spark = graph.edges.sparkSession
     matched = spark.createDataFrame([], "vertex_a long, vertex_b long")
     for _ in range(max_rounds):
-        if und.isEmpty():
+        if und.observed["rows"] == 0:
             _free_checkpoint(und)
             return matched
         e = F.struct("pri", "a", "b")
@@ -3035,7 +2956,8 @@ def maximal_matching(
         )
         nxt = truncate_plan(
             und.join(mv.select(F.col("v").alias("a")), "a", "left_anti")
-            .join(mv.select(F.col("v").alias("b")), "b", "left_anti")
+            .join(mv.select(F.col("v").alias("b")), "b", "left_anti"),
+            observe={},
         )
         _free_checkpoint(und)
         _free_checkpoint(matched)
@@ -3085,8 +3007,8 @@ def topo_layers(
     for layer in range(max_layers):
         targets = edges.select(F.col(OBJECT).alias(VERTEX_ID)).distinct()
         exposed = live_v.join(targets, VERTEX_ID, "left_anti")
-        exposed = truncate_plan(exposed)
-        if exposed.isEmpty():
+        exposed = truncate_plan(exposed, observe={})
+        if exposed.observed["rows"] == 0:
             _free_checkpoint(exposed)
             break
         new_out = truncate_plan(
@@ -3376,8 +3298,8 @@ def betweenness(
             .agg(F.sum("sigma").alias("sigma"))
             .join(settled, [VERTEX_ID, "src"], "left_anti")
         )
-        nxt = truncate_plan(nxt)
-        if nxt.isEmpty():
+        nxt = truncate_plan(nxt, observe={})
+        if nxt.observed["rows"] == 0:
             _free_checkpoint(nxt)
             break
         levels.append(nxt)
@@ -3519,8 +3441,8 @@ def minimum_spanning_forest(
             .filter(F.col("ca") != F.col("cb"))
             .select("a", "b", "w", "ca", "cb")
         )
-        live = truncate_plan(live)
-        if live.isEmpty():
+        live = truncate_plan(live, observe={})
+        if live.observed["rows"] == 0:
             _free_checkpoint(live)
             _free_checkpoint(und)
             _free_checkpoint(comp)
@@ -3653,10 +3575,10 @@ def greedy_coloring(
         )
     )
     spark = graph.edges.sparkSession
-    uncol = truncate_plan(nbr.select("v").distinct())
+    uncol = truncate_plan(nbr.select("v").distinct(), observe={})
     colored = spark.createDataFrame([], f"{VERTEX_ID} long, color int")
     for _rnd in range(max_rounds):
-        if uncol.isEmpty():
+        if uncol.observed["rows"] == 0:
             _free_checkpoint(uncol)
             _free_checkpoint(nbr)
             return colored
@@ -3700,7 +3622,9 @@ def greedy_coloring(
                 mex.select(F.col("v").alias(VERTEX_ID), "color")
             )
         )
-        new_uncol = truncate_plan(uncol.join(sel, "v", "left_anti"))
+        new_uncol = truncate_plan(
+            uncol.join(sel, "v", "left_anti"), observe={}
+        )
         _free_checkpoint(uncol)
         _free_checkpoint(sel)
         uncol = new_uncol
@@ -4693,8 +4617,8 @@ def edge_betweenness(
             .agg(F.sum("sigma").alias("sigma"))
             .join(settled, [VERTEX_ID, "src"], "left_anti")
         )
-        nxt = truncate_plan(nxt)
-        if nxt.isEmpty():
+        nxt = truncate_plan(nxt, observe={})
+        if nxt.observed["rows"] == 0:
             _free_checkpoint(nxt)
             break
         levels.append(nxt)

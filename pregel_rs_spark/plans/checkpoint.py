@@ -12,7 +12,11 @@ a JSON manifest recording:
   * superstep number and wall-clock timestamp,
   * total rows + per-partition row counts (the "per-partition lineage" —
     which partition of the state table holds how many vertices, so a resumed
-    run can validate completeness before continuing),
+    run can validate completeness before continuing).  The total is
+    observed on the write job itself and the per-partition counts come from
+    the written files' metadata (parquet footers; Iceberg's ``files``
+    table), so a parquet write is one Spark job; the two must agree or the
+    write raises,
   * engine metrics for the superstep (delta / changed / messages),
   * a config hash so a resume against a *different* program is refused.
 
@@ -30,7 +34,7 @@ import os
 import time
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pregel_rs_spark.sources.io import TableStore
@@ -75,21 +79,28 @@ class CheckpointStore:
         self, superstep: int, state: DataFrame, metrics=None, final: bool = False
     ) -> None:
         table = f"state_{superstep:05d}"
-        self.tables.write(table, state)
-        # per-partition lineage of the *written* table (what resume will read)
-        written = self.tables.read(table)
-        lineage_rows = (
-            written.groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
+        obs = Observation()
+        self.tables.write(
+            table, state.observe(obs, F.count(F.lit(1)).alias("rows"))
         )
-        per_partition = sorted((r.pid, r.rows) for r in lineage_rows)
+        rows = obs.get["rows"]
+        # per-partition lineage of the *written* table (what resume will
+        # read), from its files' metadata — no re-read of the rows
+        files = self.tables.file_row_counts(table)
+        on_disk = sum(n for _, _, n in files)
+        if on_disk != rows:
+            raise RuntimeError(
+                f"checkpoint {table}: the write observed {rows} rows but its "
+                f"data files hold {on_disk}; no manifest written"
+            )
         payload = {
             "superstep": superstep,
             "wall_time": time.time(),
             "table": table,
-            "rows": sum(r for _, r in per_partition),
-            "partitions": [{"pid": p, "rows": r} for p, r in per_partition],
+            "rows": rows,
+            "partitions": [
+                {"pid": p, "file": f, "rows": n} for p, f, n in files
+            ],
             "config_hash": self.config_hash,
             "final": final,
             "metrics": dataclasses.asdict(metrics) if metrics is not None else None,

@@ -57,7 +57,7 @@ from dataclasses import dataclass, field
 from enum import Enum
 from typing import Callable, Optional, Union
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from pregel_rs_spark.columns import (
@@ -125,9 +125,42 @@ def _referenced_names(df_schema_probe: DataFrame, exprs: list[Column]) -> set[st
     return names
 
 
-def truncate_plan(df: DataFrame, preserve_partitioning: bool = True) -> DataFrame:
+# JVM handles truncate_plan needs, resolved once per gateway on first use:
+# every ``jvm.org.apache…`` chain is a py4j reflection round trip whose
+# failed Class.forName probes scan the whole classpath (measured 1.1-1.6 ms
+# per chain on 4 vCPUs, 0.03 ms cached; five chains per truncate_plan call).
+_JVM_REFS: dict[str, object] = {}
+_JVM_REFS_OWNER = None
+
+
+def _jvm_ref(jvm, path: str):
+    """``jvm.<path>`` (a class, package member or static field), cached."""
+    global _JVM_REFS_OWNER
+    if _JVM_REFS_OWNER is not jvm:
+        _JVM_REFS.clear()
+        _JVM_REFS_OWNER = jvm
+    ref = _JVM_REFS.get(path)
+    if ref is None:
+        ref = jvm
+        for part in path.split("."):
+            ref = getattr(ref, part)
+        _JVM_REFS[path] = ref
+    return ref
+
+
+def truncate_plan(
+    df: DataFrame,
+    preserve_partitioning: bool = True,
+    observe: Optional[dict[str, Column]] = None,
+) -> DataFrame:
     """Materialize ``df`` and return a DataFrame whose plan is a bare
     ``LogicalRDD`` scan — the iterative-lineage barrier.
+
+    ``observe`` (name → aggregate Column over ``df``'s columns) rides the
+    materializing job as an ``Observation``: the result's ``observed`` dict
+    holds each named value plus ``rows``, the row count, so a loop learns
+    "converged" or "empty" without a second Spark action.  ``{}`` observes
+    the row count alone.  Without ``observe``, ``observed`` is None.
 
     ``preserve_partitioning`` decides whether the rewrap ADVERTISES the
     checkpoint's hash partitioning to Catalyst:
@@ -173,14 +206,26 @@ def truncate_plan(df: DataFrame, preserve_partitioning: bool = True) -> DataFram
     # lives as a handful of big byte buffers instead.
     from pyspark.storagelevel import StorageLevel
 
+    obs = None
+    if observe is not None:
+        if "rows" in observe:
+            raise ValueError("truncate_plan: 'rows' is the reserved row count")
+        obs = Observation()
+        df = df.observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            *[e.alias(k) for k, e in observe.items()],
+        )
     ck = df.localCheckpoint(
         eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
     )
+    # complete once the eager checkpoint job returns
+    observed = obs.get if obs is not None else None
     try:
         spark = df.sparkSession
         jvm = spark.sparkContext._jvm
         lr = ck._jdf.queryExecution().analyzed()  # the checkpoint LogicalRDD
-        none = getattr(jvm.scala, "None$").__getattr__("MODULE$")
+        none = _jvm_ref(jvm, "scala.None$.MODULE$")
         # Eagerly evaluate the checkpoint's origin statistics and pass them
         # through as a CONSTANT.  The O(3^superstep) pathology came from
         # *lazy* origin stats recursing through the whole checkpoint
@@ -204,15 +249,14 @@ def truncate_plan(df: DataFrame, preserve_partitioning: bool = True) -> DataFram
             # inflated rowCount/column stats.  Sane estimates pass through
             # untouched.  Pinned by test_truncate_plan_stats_clamped.
             if raw_stats.sizeInBytes().bitLength() > 63:
-                cap = jvm.scala.math.BigInt.apply(
+                cap = _jvm_ref(jvm, "scala.math.BigInt").apply(
                     spark._jsparkSession.sessionState().conf()
                     .defaultSizeInBytes()
                 )
-                raw_stats = (
-                    jvm.org.apache.spark.sql.catalyst.plans.logical
-                    .Statistics(cap, none, raw_stats.attributeStats(), False)
-                )
-            const_stats = jvm.scala.Some(raw_stats)
+                raw_stats = _jvm_ref(
+                    jvm, "org.apache.spark.sql.catalyst.plans.logical.Statistics"
+                )(cap, none, raw_stats.attributeStats(), False)
+            const_stats = _jvm_ref(jvm, "scala.Some")(raw_stats)
         except Exception:
             const_stats = none
         # Re-create the LogicalRDD with originStats/originConstraints = None
@@ -228,14 +272,13 @@ def truncate_plan(df: DataFrame, preserve_partitioning: bool = True) -> DataFram
             out_part = lr.outputPartitioning()
             out_ord = lr.outputOrdering()
         else:
-            out_part = (
-                jvm.org.apache.spark.sql.catalyst.plans.physical
-                .UnknownPartitioning(0)
-            )
-            out_ord = getattr(
-                jvm.scala.collection.immutable, "Nil$"
-            ).__getattr__("MODULE$")
-        new_lr = jvm.org.apache.spark.sql.execution.LogicalRDD(
+            out_part = _jvm_ref(
+                jvm,
+                "org.apache.spark.sql.catalyst.plans.physical"
+                ".UnknownPartitioning",
+            )(0)
+            out_ord = _jvm_ref(jvm, "scala.collection.immutable.Nil$.MODULE$")
+        new_lr = _jvm_ref(jvm, "org.apache.spark.sql.execution.LogicalRDD")(
             lr.output(),
             lr.rdd(),
             out_part,
@@ -246,10 +289,11 @@ def truncate_plan(df: DataFrame, preserve_partitioning: bool = True) -> DataFram
             const_stats,
             none,
         )
-        new_jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        new_jdf = _jvm_ref(jvm, "org.apache.spark.sql.classic.Dataset").ofRows(
             spark._jsparkSession, new_lr
         )
         out = DataFrame(new_jdf, spark)
+        out.observed = observed
         # Handle to the materialized blocks: DataFrame.unpersist() on the
         # rewrapped frame is a no-op (it was never cached through the
         # CacheManager), so the loop frees the previous superstep's blocks
@@ -276,6 +320,7 @@ def truncate_plan(df: DataFrame, preserve_partitioning: bool = True) -> DataFram
                 RuntimeWarning,
                 stacklevel=2,
             )
+        ck.observed = observed
         return ck
 
 
@@ -811,55 +856,52 @@ class Pregel:
                     ],
                 )
 
-                # -- stats ride the materialization pass (Observation):
-                # CollectMetrics accumulates convergence delta, change
-                # counts, message totals, and the user state-stats DURING
-                # the localCheckpoint job itself — zero extra Spark jobs
-                # per superstep (an explicit .agg() action measured
-                # ~0.6-0.9 s/superstep even over the in-memory state).
-                obs = None
+                # -- stats ride the materialization pass: truncate_plan
+                # observes convergence delta, change counts, message totals
+                # and the user state-stats DURING the localCheckpoint job
+                # itself — zero extra Spark jobs per superstep (an explicit
+                # .agg() action measured ~0.6-0.9 s/superstep even over the
+                # in-memory state).
+                observe = None
                 if collect_stats:
-                    from pyspark.sql import Observation
-
                     any_changed = None
                     for c, p in prev_names.items():
                         ch = ~F.col(f"`{c}`").eqNullSafe(F.col(p))
                         any_changed = ch if any_changed is None else (any_changed | ch)
-                    obs = Observation(f"pregel_{id(self)}_{iteration}")
-                    nxt = nxt.observe(
-                        obs,
-                        F.count(F.lit(1)).alias("n"),
-                        F.max(
+                    observe = {
+                        "delta": F.max(
                             F.abs(
                                 F.col(f"`{vcol}`") - F.col(prev_names[vcol])
                             )
-                        ).alias("delta")
+                        )
                         if self.tolerance is not None
-                        else F.max(F.lit(None).cast("double")).alias("delta"),
-                        F.sum(any_changed.cast("int")).alias("changed"),
-                        F.sum(F.coalesce(F.col("__msg_cnt__"), F.lit(0))).alias(
-                            "messages"
+                        else F.max(F.lit(None).cast("double")),
+                        "changed": F.sum(any_changed.cast("int")),
+                        "messages": F.sum(
+                            F.coalesce(F.col("__msg_cnt__"), F.lit(0))
                         )
                         if count_msgs
-                        else F.max(F.lit(None).cast("long")).alias("messages"),
-                        *[
-                            e.alias(f"__ss_{k}__")
+                        else F.max(F.lit(None).cast("long")),
+                        **{
+                            f"__ss_{k}__": e
                             for k, e in self.state_stats.items()
-                        ],
-                    )
+                        },
+                    }
 
                 # -- materialize: truncate lineage (≡ collect(), pregel.rs:867) --
                 t_plan = time.monotonic() - t0
-                nxt = truncate_plan(nxt, preserve_partitioning=single_jvm)
+                nxt = truncate_plan(
+                    nxt, preserve_partitioning=single_jvm, observe=observe
+                )
                 t_ck = time.monotonic() - t0 - t_plan
 
                 delta = None
                 changed = None
                 n_vertices = -1
                 n_messages = None
-                if obs is not None:
-                    stats = obs.get  # already complete: checkpoint ran the plan
-                    n_vertices = stats["n"]
+                stats = nxt.observed
+                if stats is not None:
+                    n_vertices = stats["rows"]
                     delta = stats["delta"]
                     changed = stats["changed"]
                     n_messages = stats["messages"]
