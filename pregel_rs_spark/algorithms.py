@@ -2,19 +2,26 @@
 
 The reference ships no algorithm library — PageRank and max-value exist only
 as builder configs in its examples (examples/pagerank.rs:22-41,
-examples/maximum_value.rs:27-40).  Per the north rule we provide four
-built-ins as first-class functions; all are expressed as Pregel builder
-configs except triangle counting, which is a pure join pipeline.
+examples/maximum_value.rs:27-40).  Every algorithm here works on
+``(subject, object)`` edge tables of arbitrary size, with no driver-side
+collection of vertices or edges, in one of two shapes:
 
-Scale notes per algorithm are inline; the common ones:
-  * every algorithm works on ``(subject, object)`` edge tables of arbitrary
-    size — no driver-side collection of vertices or edges, ever;
-  * the only driver-side scalars are O(1) aggregates (vertex count,
-    dangling mass, convergence delta), each one Spark action per superstep,
-    executed against the in-memory checkpointed state.
+  * superstep programs (PageRank, components, SSSP, HITS, Katz, …) are
+    ``PregelBuilder`` configs, so ``Pregel.run`` owns the loop;
+  * the others step a state of DataFrames with ``pregel.fixpoint``: each
+    round materializes its frames with ``truncate_plan``, and the
+    convergence test reads the values observed on those jobs, so it costs
+    no extra Spark action.
+
+Checkpoint lifetime (pinned by tests/test_lifetimes.py): each algorithm body
+runs in its own ``pregel.checkpoints()`` scope.  A call that returns leaves
+alive exactly the checkpoints its returned frames read; every other
+materialization it made is freed, and a call that raises frees them all.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -28,9 +35,33 @@ from pregel_rs_spark.columns import (
     subject,
 )
 from pregel_rs_spark.graphframe import GraphFrame
-from pregel_rs_spark.pregel import MessageReceiver, PregelBuilder, truncate_plan
+from pregel_rs_spark.pregel import (
+    MessageReceiver,
+    PregelBuilder,
+    checkpoints,
+    fixpoint,
+    truncate_plan,
+)
 
 
+def _scoped(fn):
+    """Run an algorithm body in its own ``checkpoints()`` scope, keeping
+    what the result reads (see the module docstring)."""
+
+    @functools.wraps(fn)
+    def call(*args, **kwargs):
+        with checkpoints() as scope:
+            return scope.keep(fn(*args, **kwargs))
+
+    return call
+
+
+def _settled(old: DataFrame, new: DataFrame) -> bool:
+    """Peeling fixpoint: the round removed no row, or none is left."""
+    return new.observed["rows"] in (old.observed["rows"], 0)
+
+
+@_scoped
 def pagerank(
     graph: GraphFrame,
     damping: float = 0.85,
@@ -163,15 +194,13 @@ def pagerank(
     res = engine.run(resume=resume)
     if init_ranks is not None:
         res = res.drop("__warm_rank__")
-    # the final state is its own checkpoint; free the materialized vertex
-    # table (safe: lineage was severed at every superstep)
-    _free_checkpoint(g.vertices)
     # expose per-superstep metrics to benchmarks (supersteps/hour is the
     # BASELINE.json north metric); plain Python attribute on the DataFrame
     res.pregel_metrics = engine.metrics
     return res
 
 
+@_scoped
 def max_value(
     graph: GraphFrame, value_column: str = "value", max_iterations: int = 10
 ) -> DataFrame:
@@ -198,6 +227,7 @@ def max_value(
     )
 
 
+@_scoped
 def connected_components(
     graph: GraphFrame,
     max_iterations: int = 100,
@@ -254,6 +284,7 @@ def connected_components(
     return builder.build().run()
 
 
+@_scoped
 def connected_components_star(
     graph: GraphFrame, max_iterations: int = 50
 ) -> DataFrame:
@@ -290,11 +321,9 @@ def connected_components_star(
         .filter(F.col("x") != F.col("c"))
         .distinct()
     )
-    E = truncate_plan(edges)
-    prev_sig = None
-    rounds = 0
-    while rounds < max_iterations:
-        rounds += 1
+
+    def step(state, rnd):
+        E, _ = state
         # -- large-star: neighbourhood over BOTH directions --------------
         d = E.select(F.col("x").alias("u"), F.col("c").alias("v")).unionAll(
             E.select(F.col("c").alias("u"), F.col("x").alias("v"))
@@ -323,16 +352,16 @@ def connected_components_star(
             .select(F.col("nx").alias("x"), F.col("nc").alias("c"))
             .distinct()
         )
-        nxt = truncate_plan(
+        return truncate_plan(
             nxt, observe={"h": F.expr("bit_xor(xxhash64(x, c))")}
-        )
-        sig = (nxt.observed["rows"], nxt.observed["h"])
-        _free_checkpoint(E)
-        E = nxt
-        if sig == prev_sig:
-            break
-        prev_sig = sig
+        ), rnd
 
+    # converged when the (rows, hash) signature repeats; the initial edge
+    # set observes none, so round 1 never stops the loop
+    E, rounds = fixpoint(
+        (truncate_plan(edges), 0), step, max_iterations,
+        converged=lambda old, new: old[0].observed == new[0].observed,
+    )
     # fixpoint: every row is (vertex, component-min); vertices with no row
     # (isolated or the minimum itself) are their own component
     mapping = E.groupBy(F.col("x").alias(VERTEX_ID)).agg(
@@ -349,6 +378,7 @@ def connected_components_star(
     return res
 
 
+@_scoped
 def label_propagation(
     graph: GraphFrame, max_iterations: int = 5
 ) -> DataFrame:
@@ -376,38 +406,36 @@ def label_propagation(
         F.col(VERTEX_ID), F.col(VERTEX_ID).alias("label")
     ))
 
-    try:
-        for _ in range(max_iterations):
-            neigh = sym.join(
-                labels, sym[SUBJECT] == labels[VERTEX_ID], "inner"
-            ).select(F.col(OBJECT).alias("dst"), F.col("label"))
-            # self-inclusion: each vertex votes for its own current label
-            neigh = neigh.unionByName(
-                labels.select(F.col(VERTEX_ID).alias("dst"), F.col("label"))
-            )
-            counts = neigh.groupBy("dst", "label").agg(
-                F.count(F.lit(1)).alias("cnt")
-            )
-            # mode with deterministic min-label tie-break:
-            # max_by over struct(cnt, -label) — larger cnt wins, then
-            # smaller label (negated for max ordering).
-            new = counts.groupBy("dst").agg(
-                F.max_by(
-                    F.col("label"), F.struct(F.col("cnt"), -F.col("label"))
-                ).alias("new_label")
-            )
-            nxt = labels.join(
-                new, labels[VERTEX_ID] == new["dst"], "left"
-            ).select(
+    def step(labels, rnd):
+        neigh = sym.join(
+            labels, sym[SUBJECT] == labels[VERTEX_ID], "inner"
+        ).select(F.col(OBJECT).alias("dst"), F.col("label"))
+        # self-inclusion: each vertex votes for its own current label
+        neigh = neigh.unionByName(
+            labels.select(F.col(VERTEX_ID).alias("dst"), F.col("label"))
+        )
+        counts = neigh.groupBy("dst", "label").agg(
+            F.count(F.lit(1)).alias("cnt")
+        )
+        # mode with deterministic min-label tie-break:
+        # max_by over struct(cnt, -label) — larger cnt wins, then
+        # smaller label (negated for max ordering).
+        new = counts.groupBy("dst").agg(
+            F.max_by(
+                F.col("label"), F.struct(F.col("cnt"), -F.col("label"))
+            ).alias("new_label")
+        )
+        return truncate_plan(
+            labels.join(new, labels[VERTEX_ID] == new["dst"], "left").select(
                 F.col(VERTEX_ID),
                 F.coalesce(F.col("new_label"), F.col("label")).alias("label"),
             )
-            nxt = truncate_plan(nxt)
-            _free_checkpoint(labels)
-            labels = nxt
+        )
+
+    try:
+        return fixpoint(labels, step, max_iterations)
     finally:
         sym.unpersist()
-    return labels
 
 
 def _triangles_from_undirected(und: DataFrame) -> DataFrame:
@@ -479,9 +507,7 @@ def triangle_count(graph: GraphFrame) -> DataFrame:
 
     Returns ``(vertex_id, triangles)`` for ALL vertices (0 for none).
     """
-    und = graph.edges.select(
-        F.least(SUBJECT, OBJECT).alias("a"), F.greatest(SUBJECT, OBJECT).alias("b")
-    ).filter(F.col("a") != F.col("b")).distinct()
+    und = _und_simple(graph.edges)
     tris = _triangles_from_undirected(und)
 
     corners = (
@@ -499,6 +525,7 @@ def triangle_count(graph: GraphFrame) -> DataFrame:
     )
 
 
+@_scoped
 def hits(
     graph: GraphFrame,
     iterations: int = 10,
@@ -567,6 +594,7 @@ def hits(
     return res
 
 
+@_scoped
 def personalized_pagerank(
     graph: GraphFrame,
     sources: list[int],
@@ -636,11 +664,10 @@ def personalized_pagerank(
                 F.lit(0.0),
             ),
         )
-    res = builder.build().run()
-    _free_checkpoint(g.vertices)
-    return res
+    return builder.build().run()
 
 
+@_scoped
 def sssp(
     graph: GraphFrame,
     source: int,
@@ -716,6 +743,7 @@ def sssp(
     return res.drop("changed") if frontier else res
 
 
+@_scoped
 def strongly_connected_components(
     graph: GraphFrame,
     max_rounds: int = 50,
@@ -756,18 +784,14 @@ def strongly_connected_components(
         .filter(F.col(SUBJECT) != F.col(OBJECT))
         .distinct()
     )
-    active_v = truncate_plan(ids, observe={})
-    active_e = edges0
-    assigned = None
 
-    rounds = 0
-    while rounds < max_rounds:
-        rounds += 1
+    def step(state, rnd):
+        active_v, assigned = state
         if active_v.observed["rows"] == 0:
-            break
+            return None
         # edges of the live subgraph (both endpoints unassigned)
-        e_act = (
-            active_e.join(
+        e_act = truncate_plan(
+            edges0.join(
                 active_v.select(F.col(VERTEX_ID).alias(SUBJECT)), SUBJECT,
                 "left_semi",
             ).join(
@@ -775,7 +799,6 @@ def strongly_connected_components(
                 "left_semi",
             )
         )
-        e_act = truncate_plan(e_act)
 
         # 1. forward coloring: color(v) = max id reaching v
         g_fwd = GraphFrame(
@@ -813,36 +836,26 @@ def strongly_connected_components(
         done = flags.filter(F.col("max_value") == 1).select(
             VERTEX_ID, F.col("color").alias("component")
         )
-        new_assigned = (
+        new_assigned = truncate_plan(
             done if assigned is None else assigned.unionByName(done)
         )
-        new_assigned = truncate_plan(new_assigned)
-        new_active = truncate_plan(
+        return truncate_plan(
             active_v.join(done.select(VERTEX_ID), VERTEX_ID, "left_anti"),
             observe={},
-        )
-        for df in (active_v, colors, e_act):
-            _free_checkpoint(df)
-        if assigned is not None:
-            _free_checkpoint(assigned)
-        assigned, active_v = new_assigned, new_active
-        active_e = edges0
-    else:
-        raise RuntimeError(
-            f"strongly_connected_components did not converge in {max_rounds} "
-            "rounds — the graph has a long monotone-id SCC chain; raise "
-            "max_rounds (the algorithm makes progress every round)"
-        )
+        ), new_assigned
 
+    # a long monotone-id SCC chain needs many rounds (each makes progress)
+    _, assigned = fixpoint(
+        (truncate_plan(ids, observe={}), None), step, max_rounds, strict=True
+    )
     if assigned is None:  # zero-vertex graph
         return graph.vertices.withColumn(
             "component", F.col(VERTEX_ID)
         ).limit(0)
-    res = graph.vertices.join(assigned, VERTEX_ID, "inner")
-    _free_checkpoint(active_v)
-    return res
+    return graph.vertices.join(assigned, VERTEX_ID, "inner")
 
 
+@_scoped
 def k_core(
     graph: GraphFrame,
     k: int,
@@ -869,52 +882,27 @@ def k_core(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    und = (
-        graph.edges.select(
-            F.least(SUBJECT, OBJECT).alias("a"),
-            F.greatest(SUBJECT, OBJECT).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    und = truncate_plan(und, observe={})
+    und = truncate_plan(_und_simple(graph.edges), observe={})
 
-    def _degrees(e: DataFrame) -> DataFrame:
-        return (
-            e.select(F.col("a").alias(VERTEX_ID))
-            .unionAll(e.select(F.col("b")))
-            .groupBy(VERTEX_ID)
-            .agg(F.count(F.lit(1)).alias("degree"))
-        )
-
-    rounds = 0
-    while max_rounds is None or rounds < max_rounds:
-        rounds += 1
-        deg = _degrees(und)
-        keep = deg.filter(F.col("degree") >= k).select(VERTEX_ID)
-        nxt = (
+    def step(und, rnd):
+        keep = _und_degrees(und).filter(F.col("degree") >= k).select(VERTEX_ID)
+        # edge counts ride the materializing jobs; fixpoint when no edge
+        # was peeled
+        return truncate_plan(
             und.join(
                 keep.select(F.col(VERTEX_ID).alias("a")), "a", "left_semi"
             ).join(
                 keep.select(F.col(VERTEX_ID).alias("b")), "b", "left_semi"
-            )
+            ),
+            observe={},
         )
-        # edge counts ride the materializing jobs; fixpoint when no edge
-        # was peeled
-        nxt = truncate_plan(nxt, observe={})
-        n_prev, n_now = und.observed["rows"], nxt.observed["rows"]
-        _free_checkpoint(und)
-        und = nxt
-        if n_now == n_prev or n_now == 0:
-            break
 
-    # materialize the (small, O(V)) result BEFORE freeing the edge blocks it
-    # reads — the returned frame is lazy and must not depend on them
-    res = truncate_plan(_degrees(und).filter(F.col("degree") >= k))
-    _free_checkpoint(und)
-    return res
+    und = fixpoint(und, step, max_rounds, converged=_settled)
+    # materialize the (small, O(V)) result so it does not hold the edges
+    return truncate_plan(_und_degrees(und).filter(F.col("degree") >= k))
 
 
+@_scoped
 def k_truss(
     graph: GraphFrame,
     k: int = 3,
@@ -960,33 +948,17 @@ def k_truss(
             "support", F.coalesce(F.col("support"), F.lit(0)).cast("long")
         )
 
-    und = truncate_plan(
-        graph.edges.select(
-            F.least(SUBJECT, OBJECT).alias("a"),
-            F.greatest(SUBJECT, OBJECT).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct(),
-        observe={},
-    )
-    rounds = 0
-    while max_rounds is None or rounds < max_rounds:
-        rounds += 1
-        nxt = truncate_plan(
-            _support(und)
-            .filter(F.col("support") >= k - 2)
-            .select("a", "b"),
+    und = truncate_plan(_und_simple(graph.edges), observe={})
+    und = fixpoint(
+        und,
+        lambda und, rnd: truncate_plan(
+            _support(und).filter(F.col("support") >= k - 2).select("a", "b"),
             observe={},
-        )
-        n_prev, n_now = und.observed["rows"], nxt.observed["rows"]
-        _free_checkpoint(und)
-        und = nxt
-        if n_now == n_prev or n_now == 0:
-            break
-
-    res = truncate_plan(_support(und))
-    _free_checkpoint(und)
-    return res
+        ),
+        max_rounds,
+        converged=_settled,
+    )
+    return truncate_plan(_support(und))
 
 
 def _neighbor_index(edges: DataFrame, buckets: int) -> DataFrame:
@@ -1077,6 +1049,7 @@ def _neighbor_index(edges: DataFrame, buckets: int) -> DataFrame:
     )
 
 
+@_scoped
 def random_walks(
     graph: GraphFrame,
     length: int,
@@ -1126,6 +1099,31 @@ def random_walks(
     """
     if length < 0:
         raise ValueError(f"length must be >= 0, got {length}")
+    _, nbr, deg = _walk_tables(graph, nbr_buckets)
+    start_set = graph.vertices if starts is None else starts
+    start = start_set.select(
+        F.col(VERTEX_ID).alias("walk_id"),
+        F.col(VERTEX_ID).alias("vertex_id"),
+        F.lit(0).alias("step"),
+    )
+
+    def step(frames, t):
+        hop = _uniform_hop(frames[-1], nbr, deg, t, seed)
+        return frames + [
+            truncate_plan(
+                hop.select("walk_id", "vertex_id", F.lit(t).alias("step"))
+            )
+        ]
+
+    frames = fixpoint([start], step, length)
+    return functools.reduce(DataFrame.unionAll, frames).select(
+        "walk_id", "step", "vertex_id"
+    )
+
+
+def _walk_tables(graph: GraphFrame, nbr_buckets: int):
+    """The walk samplers' inputs, the index and degrees materialized once:
+    ``(distinct edges, neighbour index, (deg_subject, out_degree))``."""
     edges = graph.edges.select(SUBJECT, OBJECT).distinct()
     nbr = truncate_plan(_neighbor_index(edges, nbr_buckets))
     deg = truncate_plan(
@@ -1133,53 +1131,33 @@ def random_walks(
             F.count(F.lit(1)).alias("out_degree")
         )
     )
+    return edges, nbr, deg
 
-    start_set = graph.vertices if starts is None else starts
-    state = start_set.select(
-        F.col(VERTEX_ID).alias("walk_id"),
-        F.col(VERTEX_ID).alias("vertex_id"),
-        F.lit(0).alias("step"),
+
+def _uniform_hop(state, nbr, deg, t: int, seed: int) -> DataFrame:
+    """Step ``t`` of a first-order walk (the :func:`random_walks` pick):
+    ``(walk_id, cur, vertex_id)``, walks at dangling vertices dropped."""
+    j = state.join(deg, state["vertex_id"] == deg["deg_subject"], "inner")
+    pick = (
+        (F.col("walk_id").cast("long") % F.lit(1000003)) * F.lit(7919)
+        + (F.col("vertex_id").cast("long") % F.lit(999983)) * F.lit(104729)
+        + F.lit(t * 7919 + seed)
+    ) % F.col("out_degree")
+    j = j.select(
+        "walk_id", F.col("vertex_id").alias("cur"), pick.alias("pick_idx")
     )
-    frames = [state]
-    for t in range(1, length + 1):
-        j = state.join(
-            deg, state["vertex_id"] == deg["deg_subject"], "inner"
-        )
-        pick = (
-            (F.col("walk_id").cast("long") % F.lit(1000003)) * F.lit(7919)
-            + (F.col("vertex_id").cast("long") % F.lit(999983))
-            * F.lit(104729)
-            + F.lit(t * 7919 + seed)
-        ) % F.col("out_degree")
-        j = j.select(
-            "walk_id",
-            F.col("vertex_id").alias("cur"),
-            pick.alias("pick_idx"),
-        )
-        state = truncate_plan(
-            j.join(
-                nbr,
-                (j["cur"] == nbr["nbr_subject"])
-                & (j["pick_idx"] == nbr["nbr_idx"]),
-                "inner",
-            ).select(
-                "walk_id",
-                F.col("nbr_object").alias("vertex_id"),
-                F.lit(t).alias("step"),
-            )
-        )
-        frames.append(state)
-
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionAll(f)
-    return out.select("walk_id", "step", "vertex_id")
+    return j.join(
+        nbr,
+        (j["cur"] == nbr["nbr_subject"]) & (j["pick_idx"] == nbr["nbr_idx"]),
+        "inner",
+    ).select("walk_id", "cur", F.col("nbr_object").alias("vertex_id"))
 
 
 # ---------------------------------------------------------------------------
 # Neighborhood function / HyperBall (effective-diameter & centrality toolkit)
 # ---------------------------------------------------------------------------
 
+@_scoped
 def neighborhood_sizes(graph: GraphFrame, k: int) -> DataFrame:
     """EXACT k-hop neighborhood function: for every vertex v, the number of
     distinct vertices reachable from v in ≤ ``k`` out-hops, v included
@@ -1200,12 +1178,14 @@ def neighborhood_sizes(graph: GraphFrame, k: int) -> DataFrame:
     reach = graph.vertices.select(
         F.col(VERTEX_ID).alias("src"), F.col(VERTEX_ID).alias("member")
     )
-    reach = truncate_plan(reach)
-    for _ in range(k):
-        step = reach.join(
+
+    def step(reach, rnd):
+        hop = reach.join(
             edges, reach["member"] == edges[SUBJECT], "inner"
         ).select("src", F.col(OBJECT).alias("member"))
-        reach = truncate_plan(reach.unionAll(step).distinct())
+        return truncate_plan(reach.unionAll(hop).distinct())
+
+    reach = fixpoint(truncate_plan(reach), step, k)
     return reach.groupBy(F.col("src").alias(VERTEX_ID)).agg(
         F.count(F.lit(1)).alias("ball_size")
     )
@@ -1239,6 +1219,7 @@ def _hyperball_hash(col, portable: bool):
     return F.xxhash64(col).bitwiseAND(F.lit((1 << _HLL_BITS) - 1))
 
 
+@_scoped
 def hyperball_registers(
     graph: GraphFrame,
     k: int,
@@ -1266,14 +1247,19 @@ def hyperball_registers(
     log2 edge cases.  Integer-exact end-to-end, so a SQL oracle can
     verify the full pipeline bit-for-bit (``portable=True``).
     """
-    sketch = None
-    for sketch in _hyperball_rounds(graph, k, log2m, portable):
-        pass
+    sketch, _ = _hyperball_rounds(graph, k, log2m, portable)
     return sketch
 
 
-def _hyperball_rounds(graph, k, log2m, portable):
-    """Yield the (materialized) register table after round 0..k."""
+def _hyperball_rounds(
+    graph, k, log2m, portable, fold=lambda acc, sketch, t: None,
+    converged=None,
+):
+    """Run HyperBall rounds 1..k on :func:`fixpoint`, folding each register
+    table into an accumulator: ``acc = fold(acc, sketch_t, t)`` for round
+    t = 0..k, with ``acc`` None before round 0.  ``converged(old, new)``
+    compares ``(sketch, acc)`` states.  Returns the last ``(sketch, acc)``;
+    only the latest register table stays materialized."""
     if k < 0:
         raise ValueError(f"k must be >= 0, got {k}")
     if not 4 <= log2m <= 16:
@@ -1293,24 +1279,23 @@ def _hyperball_rounds(graph, k, log2m, portable):
         .alias("val"),
     )
     sketch = truncate_plan(sketch)
-    yield sketch
 
-    for _ in range(k):
+    def step(state, t):
+        sketch, acc = state
         inc = edges.join(
             sketch, edges[OBJECT] == sketch[VERTEX_ID], "inner"
         ).select(edges[SUBJECT].alias(VERTEX_ID), "reg", "val")
-        prev = sketch
         sketch = truncate_plan(
             sketch.unionAll(inc)
             .groupBy(VERTEX_ID, "reg")
             .agg(F.max("val").alias("val"))
         )
-        # the new table is materialized; the previous round's checkpoint
-        # blocks are dead weight (consumers only ever read the latest)
-        _free_checkpoint(prev)
-        yield sketch
+        return sketch, fold(acc, sketch, t)
+
+    return fixpoint((sketch, fold(None, sketch, 0)), step, k, converged)
 
 
+@_scoped
 def hyperball(
     graph: GraphFrame,
     k: int,
@@ -1373,6 +1358,7 @@ def _hll_estimates(regs: DataFrame, log2m: int) -> DataFrame:
     return per_v.select(VERTEX_ID, est.alias("ball_size_est"))
 
 
+@_scoped
 def effective_diameter(
     graph: GraphFrame,
     q: float = 0.9,
@@ -1397,16 +1383,19 @@ def effective_diameter(
     """
     if not 0 < q <= 1:
         raise ValueError(f"q must be in (0,1], got {q}")
-    totals: list[float] = []
-    for sketch in _hyperball_rounds(graph, max_k, log2m, portable):
+
+    def fold(totals, sketch, t):
         tot = (
             _hll_estimates(sketch, log2m)
             .agg(F.sum("ball_size_est").alias("s"))
             .collect()[0]["s"]
         )
-        totals.append(float(tot))
-        if len(totals) >= 2 and totals[-1] <= totals[-2] * (1.0 + rel_stop):
-            break
+        return (totals or []) + [float(tot)]
+
+    _, totals = _hyperball_rounds(
+        graph, max_k, log2m, portable, fold,
+        converged=lambda old, new: new[1][-1] <= old[1][-1] * (1.0 + rel_stop),
+    )
     target = q * totals[-1]
     x = float(len(totals) - 1)
     for t, n in enumerate(totals):
@@ -1506,6 +1495,7 @@ def reciprocity(graph: GraphFrame) -> DataFrame:
     )
 
 
+@_scoped
 def harmonic_centrality(
     graph: GraphFrame,
     k: int = 8,
@@ -1554,8 +1544,8 @@ def harmonic_centrality(
         + [1.0 / t - 1.0 / (t + 1) for t in range(1, k)]
         + [1.0 / k]
     )
-    acc = None
-    for t, sketch in enumerate(_hyperball_rounds(g, k, log2m, portable)):
+
+    def fold(acc, sketch, t):
         est = _hll_estimates(sketch, log2m).select(
             VERTEX_ID, F.col("ball_size_est").alias("__e__")
         )
@@ -1566,9 +1556,10 @@ def harmonic_centrality(
             acc = acc.join(est, VERTEX_ID).select(
                 VERTEX_ID, (F.col("harmonic") + term).alias("harmonic")
             )
-        # materialize so the generator's freeing of the previous round's
-        # register blocks can never force a recompute of this fold step
-        acc = truncate_plan(acc)
+        # materialized, so it does not hold this round's register table
+        return truncate_plan(acc)
+
+    _, acc = _hyperball_rounds(g, k, log2m, portable, fold)
     return acc
 
 
@@ -1587,14 +1578,7 @@ def clustering_coefficient(graph: GraphFrame) -> DataFrame:
     vertices (degree < 2 → coefficient 0.0).
     """
     tri = triangle_count(graph)
-    und = (
-        graph.edges.select(
-            F.least(SUBJECT, OBJECT).alias("a"),
-            F.greatest(SUBJECT, OBJECT).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _und_simple(graph.edges)
     deg = (
         und.select(F.col("a").alias(VERTEX_ID))
         .unionAll(und.select(F.col("b")))
@@ -1711,16 +1695,14 @@ def degree_assortativity(graph: GraphFrame) -> DataFrame:
     )
 
 
-def _free_checkpoint(df: DataFrame) -> None:
-    """Unpersist the in-memory RDD behind a ``truncate_plan`` frame (no-op
-    for plain frames) — frees superseded per-round state eagerly instead
-    of waiting for GC."""
-    rdd = getattr(df, "_ck_rdd", None)
-    if rdd is not None:
-        try:
-            rdd.unpersist(False)
-        except Exception:
-            pass
+def _und_degrees(und: DataFrame) -> DataFrame:
+    """``(vertex_id, degree)`` of a canonical undirected edge table ``(a, b)``."""
+    return (
+        und.select(F.col("a").alias(VERTEX_ID))
+        .unionAll(und.select(F.col("b")))
+        .groupBy(VERTEX_ID)
+        .agg(F.count(F.lit(1)).alias("degree"))
+    )
 
 
 def _und_simple(edges: DataFrame) -> DataFrame:
@@ -1898,6 +1880,7 @@ def modularity(graph: GraphFrame, labels: DataFrame) -> DataFrame:
     )
 
 
+@_scoped
 def katz_centrality(
     graph: GraphFrame, beta: float = 0.1, k: int = 3
 ) -> DataFrame:
@@ -1908,38 +1891,37 @@ def katz_centrality(
     are engine-portable (the β^i weights are built by repeated
     multiplication on both sides).
 
-    Scale shape: per level one equi-join of the walk-count state onto the
-    distinct edge table + one hash agg on the destination — the same
-    message-shuffle shape as a Pregel superstep; state is one long per
-    vertex, plans truncated per level so lineage stays O(1).
+    One Pregel superstep per level over the distinct edge table: each
+    vertex sends its walk count ``w`` along its out-edges, counts are
+    sum-aggregated, and ``katz`` gains ``β^i · w_i``.
 
     Returns ``(vertex_id, katz)`` for all vertices, rounded 6 dp.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    e = graph.edges.select(SUBJECT, OBJECT).distinct()
-    w = graph.vertices.select(VERTEX_ID, F.lit(1).cast("long").alias("w"))
-    score = graph.vertices.select(VERTEX_ID, F.lit(0.0).alias("katz"))
-    beta_i = 1.0
-    for _ in range(k):
-        beta_i = beta_i * beta
-        msgs = (
-            e.join(w, e[SUBJECT] == w[VERTEX_ID])
-            .groupBy(F.col(OBJECT).alias(VERTEX_ID))
-            .agg(F.sum("w").alias("w"))
+    betas = [beta]
+    while len(betas) < k:
+        betas.append(betas[-1] * beta)
+    walks = F.coalesce(msg(), F.lit(0))
+    g = GraphFrame(
+        graph.vertices.select(VERTEX_ID),
+        graph.edges.select(SUBJECT, OBJECT).distinct(),
+        closed=graph.closed,
+    )
+    score = (
+        PregelBuilder(g)
+        .max_iterations(k)
+        .with_vertex_column("katz")
+        .initial_message(F.lit(0.0))
+        .with_state_column("w", F.lit(1).cast("long"), walks)
+        .send_messages(MessageReceiver.OBJECT, subject("w"))
+        .aggregate_messages(F.sum(msg()))
+        .v_prog(
+            lambda ctx: F.col("katz") + F.lit(betas[ctx.superstep - 1]) * walks
         )
-        w = truncate_plan(
-            graph.vertices.select(VERTEX_ID)
-            .join(msgs, VERTEX_ID, "left")
-            .select(VERTEX_ID, F.coalesce(F.col("w"), F.lit(0)).alias("w"))
-        )
-        score = truncate_plan(
-            score.join(w, VERTEX_ID)
-            .select(
-                VERTEX_ID,
-                (F.col("katz") + F.lit(beta_i) * F.col("w")).alias("katz"),
-            )
-        )
+        .build()
+        .run()
+    )
     return score.select(VERTEX_ID, F.round("katz", 6).alias("katz"))
 
 
@@ -1991,6 +1973,7 @@ def squares(graph: GraphFrame, max_degree: int = 1000) -> DataFrame:
     )
 
 
+@_scoped
 def neighborhood_function_frame(
     graph: GraphFrame, k: int, log2m: int = 7, portable: bool = False
 ) -> DataFrame:
@@ -2008,9 +1991,9 @@ def neighborhood_function_frame(
 
     Returns ``(hop, nf)`` with k+1 rows; ``nf`` is N(hop) × 10^6.
     """
-    rows = []
-    for t, sketch in enumerate(_hyperball_rounds(graph, k, log2m, portable)):
-        rows.append(
+
+    def fold(rows, sketch, t):
+        return (rows or []) + [
             truncate_plan(
                 _hll_estimates(sketch, log2m)
                 .agg(
@@ -2021,13 +2004,13 @@ def neighborhood_function_frame(
                 )
                 .select(F.lit(t).cast("long").alias("hop"), "nf")
             )
-        )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionAll(r)
-    return out
+        ]
+
+    _, rows = _hyperball_rounds(graph, k, log2m, portable, fold)
+    return functools.reduce(DataFrame.unionAll, rows)
 
 
+@_scoped
 def effective_diameter_frame(
     graph: GraphFrame,
     k: int,
@@ -2177,6 +2160,7 @@ def negative_edge_samples(
     )
 
 
+@_scoped
 def trustrank(
     graph: GraphFrame,
     seeds: DataFrame,
@@ -2267,11 +2251,10 @@ def trustrank(
                 F.lit(0.0),
             ),
         )
-    res = builder.build().run()
-    _free_checkpoint(g.vertices)
-    return res
+    return builder.build().run()
 
 
+@_scoped
 def spam_mass(
     graph: GraphFrame,
     seeds: DataFrame,
@@ -2394,6 +2377,7 @@ def neighbor_sample(
     return out
 
 
+@_scoped
 def salsa(
     graph: GraphFrame,
     iterations: int = 10,
@@ -2465,7 +2449,6 @@ def salsa(
         res = res.withColumn(
             "auth", F.col("auth") / F.lit(float(sa))
         ).withColumn("hub", F.col("hub") / F.lit(float(sh)))
-    _free_checkpoint(g.vertices)
     return res
 
 
@@ -2484,6 +2467,7 @@ def _mis_priority(vid):
     return (nonneg * F.lit(104729) + F.lit(7919)) % m
 
 
+@_scoped
 def maximal_independent_set(
     graph: GraphFrame,
     max_rounds: int | None = None,
@@ -2517,26 +2501,13 @@ def maximal_independent_set(
     Returns ``(vertex_id, state)`` with state in
     ``('mis', 'excluded', 'undecided')``.
     """
-    und = (
-        graph.edges.select(
-            F.least(SUBJECT, OBJECT).alias("a"),
-            F.greatest(SUBJECT, OBJECT).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _und_simple(graph.edges)
     # both directions: neighbor lookups are one equi-join on "a"
     sym = und.unionAll(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
     sym = truncate_plan(sym)
 
-    undecided = truncate_plan(graph.vertices.select(VERTEX_ID))
-    spark = undecided.sparkSession
-    mis = spark.createDataFrame([], "vertex_id long")
-    excluded = spark.createDataFrame([], "vertex_id long")
-
-    rounds = 0
-    while max_rounds is None or rounds < max_rounds:
-        rounds += 1
+    def step(state, rnd):
+        undecided, mis, excluded = state
         u_a = undecided.select(F.col(VERTEX_ID).alias("a"))
         u_b = undecided.select(F.col(VERTEX_ID).alias("b"))
         e_act = sym.join(u_a, "a", "left_semi").join(u_b, "b", "left_semi")
@@ -2573,32 +2544,31 @@ def maximal_independent_set(
         )
         mis = truncate_plan(mis.unionAll(winners))
         excluded = truncate_plan(excluded.unionAll(newly_excluded))
-        nxt = truncate_plan(
+        undecided = truncate_plan(
             undecided.join(winners, VERTEX_ID, "left_anti").join(
                 newly_excluded, VERTEX_ID, "left_anti"
             ),
             observe={},
         )
-        _free_checkpoint(undecided)
-        _free_checkpoint(winners)
-        _free_checkpoint(newly_excluded)
-        undecided = nxt
-        if nxt.observed["rows"] == 0:
-            break
+        return undecided, mis, excluded
 
-    res = (
+    empty = graph.vertices.sparkSession.createDataFrame([], "vertex_id long")
+    undecided, mis, excluded = fixpoint(
+        (truncate_plan(graph.vertices.select(VERTEX_ID)), empty, empty),
+        step,
+        max_rounds,
+        converged=lambda old, new: new[0].observed["rows"] == 0,
+    )
+    return truncate_plan(
         mis.select(VERTEX_ID, F.lit("mis").alias("state"))
         .unionAll(excluded.select(VERTEX_ID, F.lit("excluded").alias("state")))
         .unionAll(
             undecided.select(VERTEX_ID, F.lit("undecided").alias("state"))
         )
     )
-    res = truncate_plan(res)
-    for df in (sym, mis, excluded, undecided):
-        _free_checkpoint(df)
-    return res
 
 
+@_scoped
 def bowtie_classes(
     graph: GraphFrame,
     max_iterations: int = 200,
@@ -2708,6 +2678,7 @@ def bowtie_classes(
     )
 
 
+@_scoped
 def coreness(
     graph: GraphFrame,
     max_rounds: int | None = None,
@@ -2769,9 +2740,8 @@ def coreness(
         .orderBy(F.desc("val"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    rounds = 0
-    while max_rounds is None or rounds < max_rounds:
-        rounds += 1
+
+    def step(core, rnd):
         nbr_vals = nbrs.join(
             core.select(
                 F.col(VERTEX_ID).alias("nbr"), F.col("coreness").alias("val")
@@ -2786,7 +2756,7 @@ def coreness(
             .groupBy(VERTEX_ID)
             .agg(F.max(F.least(F.col("val"), F.col("cnt_ge"))).alias("h"))
         )
-        nxt = truncate_plan(
+        return truncate_plan(
             core.join(h, VERTEX_ID).select(
                 VERTEX_ID,
                 F.least(F.col("coreness"), F.col("h"))
@@ -2795,14 +2765,16 @@ def coreness(
             ),
             observe=total,
         )
-        converged = nxt.observed == core.observed
-        _free_checkpoint(core)
-        core = nxt
-        if max_rounds is None and converged:
-            break
-    return core
+
+    # at the fixpoint further rounds change nothing, so stopping there
+    # also returns the exact prefix of a fixed ``max_rounds`` budget
+    return fixpoint(
+        core, step, max_rounds,
+        converged=lambda old, new: old.observed == new.observed,
+    )
 
 
+@_scoped
 def landmark_distances(
     graph: GraphFrame,
     landmarks: list[int],
@@ -2844,9 +2816,10 @@ def landmark_distances(
             schema=f"{VERTEX_ID} long, landmark long, dist int",
         )
     )
-    frontier = settled
-    for hop in range(1, max_hops + 1):
-        nxt = (
+
+    def step(state, hop):
+        settled, frontier = state
+        nxt = truncate_plan(
             frontier.join(edges, frontier[VERTEX_ID] == edges[SUBJECT])
             .select(
                 F.col(OBJECT).alias(VERTEX_ID),
@@ -2858,16 +2831,14 @@ def landmark_distances(
                 settled.select(VERTEX_ID, "landmark"),
                 [VERTEX_ID, "landmark"],
                 "left_anti",
-            )
+            ),
+            observe={},
         )
-        nxt = truncate_plan(nxt, observe={})
         if nxt.observed["rows"] == 0:
-            _free_checkpoint(nxt)
-            break
-        new_settled = truncate_plan(settled.unionByName(nxt))
-        _free_checkpoint(settled)
-        _free_checkpoint(frontier)
-        settled, frontier = new_settled, nxt
+            return None
+        return truncate_plan(settled.unionByName(nxt)), nxt
+
+    settled, _ = fixpoint((settled, settled), step, max_hops)
     return settled
 
 
@@ -2881,6 +2852,7 @@ def _edge_priority(a, b):
     return (na * F.lit(104729) + nb * F.lit(7919) + F.lit(17)) % m
 
 
+@_scoped
 def maximal_matching(
     graph: GraphFrame,
     max_rounds: int | None = None,
@@ -2909,22 +2881,14 @@ def maximal_matching(
     """
     if max_rounds is None:
         max_rounds = 50
-    und = (
-        graph.edges.select(
-            F.least(SUBJECT, OBJECT).alias("a"),
-            F.greatest(SUBJECT, OBJECT).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .withColumn("pri", _edge_priority(F.col("a"), F.col("b")))
+    und = _und_simple(graph.edges).withColumn(
+        "pri", _edge_priority(F.col("a"), F.col("b"))
     )
-    und = truncate_plan(und, observe={})
-    spark = graph.edges.sparkSession
-    matched = spark.createDataFrame([], "vertex_a long, vertex_b long")
-    for _ in range(max_rounds):
+
+    def step(state, rnd):
+        und, matched = state
         if und.observed["rows"] == 0:
-            _free_checkpoint(und)
-            return matched
+            return None
         e = F.struct("pri", "a", "b")
         inc = und.select(F.col("a").alias("v"), e.alias("e")).unionByName(
             und.select(F.col("b").alias("v"), e.alias("e"))
@@ -2942,7 +2906,7 @@ def maximal_matching(
             .filter((F.col("ea") == e) & (F.col("eb") == e))
             .select("a", "b")
         )
-        new = truncate_plan(
+        matched = truncate_plan(
             matched.unionByName(
                 cand.select(
                     F.col("a").alias("vertex_a"), F.col("b").alias("vertex_b")
@@ -2954,26 +2918,28 @@ def maximal_matching(
             .unionByName(cand.select(F.col("b").alias("v")))
             .distinct()
         )
-        nxt = truncate_plan(
+        return truncate_plan(
             und.join(mv.select(F.col("v").alias("a")), "a", "left_anti")
             .join(mv.select(F.col("v").alias("b")), "b", "left_anti"),
             observe={},
-        )
-        _free_checkpoint(und)
-        _free_checkpoint(matched)
-        und, matched = nxt, new
-    if strict:
-        raise RuntimeError(
-            f"maximal_matching did not converge in {max_rounds} rounds — "
-            "raise max_rounds (every round matches >= 1 edge, so this "
-            "bounds |V|/2; hash priorities make O(log n) typical)"
-        )
-    # strict=False: the bounded-round PARTIAL matching (still a valid
-    # matching, maximality not guaranteed) — the SQL-unrollable mode the
-    # driver oracle uses, mirroring maximal_independent_set(max_rounds=2).
+        ), matched
+
+    # every round matches >= 1 edge, so at most |V|/2 rounds run (hash
+    # priorities make O(log n) typical).  strict=False returns the
+    # bounded-round PARTIAL matching (still a valid matching, maximality
+    # not guaranteed) — the SQL-unrollable mode the driver oracle uses,
+    # mirroring maximal_independent_set(max_rounds=2).
+    matched = graph.edges.sparkSession.createDataFrame(
+        [], "vertex_a long, vertex_b long"
+    )
+    _, matched = fixpoint(
+        (truncate_plan(und, observe={}), matched), step, max_rounds,
+        strict=strict,
+    )
     return matched
 
 
+@_scoped
 def topo_layers(
     graph: GraphFrame,
     max_layers: int,
@@ -3002,37 +2968,41 @@ def topo_layers(
         .distinct()
     )
     live_v = truncate_plan(graph.vertices.select(VERTEX_ID))
-    spark = graph.edges.sparkSession
-    out = spark.createDataFrame([], f"{VERTEX_ID} long, layer int")
-    for layer in range(max_layers):
+    out = graph.edges.sparkSession.createDataFrame(
+        [], f"{VERTEX_ID} long, layer int"
+    )
+
+    def step(state, rnd):
+        out, live_v, edges = state
         targets = edges.select(F.col(OBJECT).alias(VERTEX_ID)).distinct()
-        exposed = live_v.join(targets, VERTEX_ID, "left_anti")
-        exposed = truncate_plan(exposed, observe={})
+        exposed = truncate_plan(
+            live_v.join(targets, VERTEX_ID, "left_anti"), observe={}
+        )
         if exposed.observed["rows"] == 0:
-            _free_checkpoint(exposed)
-            break
-        new_out = truncate_plan(
-            out.unionByName(
-                exposed.select(
-                    VERTEX_ID, F.lit(layer).cast("int").alias("layer")
+            return None
+        return (
+            truncate_plan(
+                out.unionByName(
+                    exposed.select(
+                        VERTEX_ID, F.lit(rnd - 1).cast("int").alias("layer")
+                    )
                 )
-            )
+            ),
+            truncate_plan(live_v.join(exposed, VERTEX_ID, "left_anti")),
+            truncate_plan(
+                edges.join(
+                    exposed.select(F.col(VERTEX_ID).alias(SUBJECT)),
+                    SUBJECT,
+                    "left_anti",
+                )
+            ),
         )
-        nxt_v = truncate_plan(live_v.join(exposed, VERTEX_ID, "left_anti"))
-        nxt_e = truncate_plan(
-            edges.join(
-                exposed.select(F.col(VERTEX_ID).alias(SUBJECT)),
-                SUBJECT,
-                "left_anti",
-            )
-        )
-        _free_checkpoint(out)
-        _free_checkpoint(live_v)
-        _free_checkpoint(edges)
-        out, live_v, edges = new_out, nxt_v, nxt_e
+
+    out, _, _ = fixpoint((out, live_v, edges), step, max_layers)
     return out
 
 
+@_scoped
 def coarsen_graph(
     graph: GraphFrame,
     max_rounds: int | None = None,
@@ -3225,6 +3195,7 @@ def degree_percentiles(graph: GraphFrame, direction: str = "out") -> DataFrame:
     )
 
 
+@_scoped
 def betweenness(
     graph: GraphFrame,
     sources: list[int],
@@ -3276,36 +3247,7 @@ def betweenness(
     if scale < 1:
         raise ValueError(f"scale must be >= 1, got {scale}")
     spark = graph.edges.sparkSession
-    edges = truncate_plan(graph.edges.select(SUBJECT, OBJECT).distinct())
-    lvl0 = truncate_plan(
-        spark.createDataFrame(
-            [(int(s), int(s), 1) for s in sorted(set(sources))],
-            schema=f"{VERTEX_ID} long, src long, sigma long",
-        )
-    )
-    levels = [lvl0]
-    settled = lvl0.select(VERTEX_ID, "src")
-    # -- forward: level-synchronous BFS with integer path counting --
-    for _hop in range(1, max_hops + 1):
-        prev = levels[-1]
-        msgs = prev.join(edges, prev[VERTEX_ID] == edges[SUBJECT]).select(
-            F.col(OBJECT).alias(VERTEX_ID),
-            prev["src"].alias("src"),
-            prev["sigma"].alias("sigma"),
-        )
-        nxt = (
-            msgs.groupBy(VERTEX_ID, "src")
-            .agg(F.sum("sigma").alias("sigma"))
-            .join(settled, [VERTEX_ID, "src"], "left_anti")
-        )
-        nxt = truncate_plan(nxt, observe={})
-        if nxt.observed["rows"] == 0:
-            _free_checkpoint(nxt)
-            break
-        levels.append(nxt)
-        new_settled = truncate_plan(settled.unionByName(nxt.select(VERTEX_ID, "src")))
-        _free_checkpoint(settled)
-        settled = new_settled
+    edges, levels = _bfs_levels(graph, sources, max_hops)
     # -- backward: scaled-integer dependency accumulation, deepest first --
     deepest = len(levels) - 1
     zero = F.lit(0).cast("long").alias("delta")
@@ -3366,6 +3308,47 @@ def betweenness(
     )
 
 
+def _bfs_levels(graph: GraphFrame, sources: list[int], max_hops: int):
+    """Forward phase of (edge) betweenness: level-synchronous BFS with
+    integer path counting on the composite key ``(vertex, src)``.  Returns
+    the materialized distinct edges and the levels ``[(vertex_id, src,
+    sigma)]`` from depth 0 (the sources) to the deepest non-empty one."""
+    spark = graph.edges.sparkSession
+    edges = truncate_plan(graph.edges.select(SUBJECT, OBJECT).distinct())
+    lvl0 = truncate_plan(
+        spark.createDataFrame(
+            [(int(s), int(s), 1) for s in sorted(set(sources))],
+            schema=f"{VERTEX_ID} long, src long, sigma long",
+        )
+    )
+
+    def step(state, hop):
+        levels, settled = state
+        prev = levels[-1]
+        msgs = prev.join(edges, prev[VERTEX_ID] == edges[SUBJECT]).select(
+            F.col(OBJECT).alias(VERTEX_ID),
+            prev["src"].alias("src"),
+            prev["sigma"].alias("sigma"),
+        )
+        nxt = truncate_plan(
+            msgs.groupBy(VERTEX_ID, "src")
+            .agg(F.sum("sigma").alias("sigma"))
+            .join(settled, [VERTEX_ID, "src"], "left_anti"),
+            observe={},
+        )
+        if nxt.observed["rows"] == 0:
+            return None
+        return levels + [nxt], truncate_plan(
+            settled.unionByName(nxt.select(VERTEX_ID, "src"))
+        )
+
+    levels, _ = fixpoint(
+        ([lvl0], lvl0.select(VERTEX_ID, "src")), step, max_hops
+    )
+    return edges, levels
+
+
+@_scoped
 def minimum_spanning_forest(
     graph: GraphFrame,
     max_rounds: int | None = None,
@@ -3422,16 +3405,30 @@ def minimum_spanning_forest(
             "w", F.lit(1) + (F.col("a") + F.col("b")) % F.lit(5)
         )
     und = truncate_plan(und)
-    spark = graph.edges.sparkSession
     comp = truncate_plan(
         und.select(F.col("a").alias("v"))
         .unionByName(und.select(F.col("b").alias("v")))
         .distinct()
         .select("v", F.col("v").alias("comp"))
     )
-    forest = spark.createDataFrame([], "vertex_a long, vertex_b long, weight long")
-    for rnd in range(max_rounds):
-        live = (
+    forest = graph.edges.sparkSession.createDataFrame(
+        [], "vertex_a long, vertex_b long, weight long"
+    )
+
+    def double(par, rnd):
+        """One pointer-doubling hop; None once every pointer is a root."""
+        j = (
+            par.select("c", F.col("p").alias("mid"))
+            .join(par.select(F.col("c").alias("mid"), F.col("p").alias("p2")), "mid")
+            .select("c", F.col("mid").alias("p"), "p2")
+        )
+        if j.filter(F.col("p2") != F.col("p")).isEmpty():
+            return None
+        return truncate_plan(j.select("c", F.col("p2").alias("p")))
+
+    def step(state, rnd):
+        und, comp, forest = state
+        live = truncate_plan(
             und.join(
                 comp.select(F.col("v").alias("a"), F.col("comp").alias("ca")), "a"
             )
@@ -3439,14 +3436,11 @@ def minimum_spanning_forest(
                 comp.select(F.col("v").alias("b"), F.col("comp").alias("cb")), "b"
             )
             .filter(F.col("ca") != F.col("cb"))
-            .select("a", "b", "w", "ca", "cb")
+            .select("a", "b", "w", "ca", "cb"),
+            observe={},
         )
-        live = truncate_plan(live, observe={})
         if live.observed["rows"] == 0:
-            _free_checkpoint(live)
-            _free_checkpoint(und)
-            _free_checkpoint(comp)
-            return forest
+            return None
         est = F.struct("w", "a", "b", "oc")
         cand = live.select(
             F.col("ca").alias("c"), "w", "a", "b", F.col("cb").alias("oc")
@@ -3491,36 +3485,22 @@ def minimum_spanning_forest(
                 .alias("p"),
             )
         )
-        while True:
-            j = (
-                par.select("c", F.col("p").alias("mid"))
-                .join(par.select(F.col("c").alias("mid"), F.col("p").alias("p2")), "mid")
-                .select("c", F.col("mid").alias("p"), "p2")
-            )
-            if j.filter(F.col("p2") != F.col("p")).isEmpty():
-                break
-            nxt = truncate_plan(j.select("c", F.col("p2").alias("p")))
-            _free_checkpoint(par)
-            par = nxt
-        new_comp = truncate_plan(
+        par = fixpoint(par, double)
+        comp = truncate_plan(
             comp.join(par.select(F.col("c").alias("comp"), "p"), "comp", "left")
             .select("v", F.coalesce("p", "comp").alias("comp"))
         )
-        _free_checkpoint(comp)
-        comp = new_comp
         # intra-component edges never come back: shrink the live set
-        new_und = truncate_plan(live.select("a", "b", "w"))
-        _free_checkpoint(und)
-        und = new_und
-    if strict:
-        raise RuntimeError(
-            f"minimum_spanning_forest did not converge in {max_rounds} rounds; "
-            "raise max_rounds (O(log n) expected) or pass strict=False for "
-            "the bounded-prefix forest"
-        )
+        return truncate_plan(live.select("a", "b", "w")), comp, forest
+
+    # O(log n) rounds expected; strict=False returns the bounded-prefix forest
+    _, _, forest = fixpoint(
+        (und, comp, forest), step, max_rounds, strict=strict
+    )
     return forest
 
 
+@_scoped
 def greedy_coloring(
     graph: GraphFrame,
     max_rounds: int | None = None,
@@ -3561,27 +3541,17 @@ def greedy_coloring(
         max_rounds = 50
     if max_rounds < 1:
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
-    und = (
-        graph.edges.select(
-            F.least(SUBJECT, OBJECT).alias("a"),
-            F.greatest(SUBJECT, OBJECT).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _und_simple(graph.edges)
     nbr = truncate_plan(
         und.select(F.col("a").alias("v"), F.col("b").alias("u")).unionByName(
             und.select(F.col("b").alias("v"), F.col("a").alias("u"))
         )
     )
-    spark = graph.edges.sparkSession
-    uncol = truncate_plan(nbr.select("v").distinct(), observe={})
-    colored = spark.createDataFrame([], f"{VERTEX_ID} long, color int")
-    for _rnd in range(max_rounds):
+
+    def step(state, rnd):
+        uncol, colored = state
         if uncol.observed["rows"] == 0:
-            _free_checkpoint(uncol)
-            _free_checkpoint(nbr)
-            return colored
+            return None
         # edges whose BOTH endpoints are uncolored decide local maxima
         live = nbr.join(uncol, "v").join(
             uncol.select(F.col("v").alias("u")), "u"
@@ -3622,18 +3592,20 @@ def greedy_coloring(
                 mex.select(F.col("v").alias(VERTEX_ID), "color")
             )
         )
-        new_uncol = truncate_plan(
+        return truncate_plan(
             uncol.join(sel, "v", "left_anti"), observe={}
-        )
-        _free_checkpoint(uncol)
-        _free_checkpoint(sel)
-        uncol = new_uncol
-    if strict:
-        raise RuntimeError(
-            f"greedy_coloring did not converge in {max_rounds} rounds; "
-            "raise max_rounds or pass strict=False for the bounded-prefix "
-            "partial coloring"
-        )
+        ), colored
+
+    # strict=False returns the bounded-prefix partial coloring
+    colored = graph.edges.sparkSession.createDataFrame(
+        [], f"{VERTEX_ID} long, color int"
+    )
+    _, colored = fixpoint(
+        (truncate_plan(nbr.select("v").distinct(), observe={}), colored),
+        step,
+        max_rounds,
+        strict=strict,
+    )
     return colored
 
 
@@ -3649,6 +3621,7 @@ def _wl_hash(x):
     return (((x % m) + m) % m * F.lit(_WL_A) + F.lit(_WL_B)) % m
 
 
+@_scoped
 def wl_colors(graph: GraphFrame, rounds: int = 2) -> DataFrame:
     """1-dimensional Weisfeiler-Leman color refinement (public technique:
     the WL isomorphism test; Shervashidze et al. JMLR'11 WL kernels; the
@@ -3676,14 +3649,7 @@ def wl_colors(graph: GraphFrame, rounds: int = 2) -> DataFrame:
     """
     if rounds < 0:
         raise ValueError(f"rounds must be >= 0, got {rounds}")
-    und = (
-        graph.edges.select(
-            F.least(SUBJECT, OBJECT).alias("a"),
-            F.greatest(SUBJECT, OBJECT).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _und_simple(graph.edges)
     nbr = truncate_plan(
         und.select(F.col("a").alias("v"), F.col("b").alias("u")).unionByName(
             und.select(F.col("b").alias("v"), F.col("a").alias("u"))
@@ -3692,12 +3658,13 @@ def wl_colors(graph: GraphFrame, rounds: int = 2) -> DataFrame:
     col = truncate_plan(
         nbr.groupBy("v").agg((F.count(F.lit(1)) % F.lit(_WL_M)).alias("c"))
     )
-    for _ in range(rounds):
+
+    def step(col, rnd):
         msgs = nbr.join(
             col.select(F.col("v").alias("u"), F.col("c").alias("cu")), "u"
         ).select("v", _wl_hash(F.col("cu")).alias("t"))
         sums = msgs.groupBy("v").agg((F.sum("t") % F.lit(_WL_M)).alias("s"))
-        new_col = truncate_plan(
+        return truncate_plan(
             col.join(sums, "v").select(
                 "v",
                 (
@@ -3706,11 +3673,12 @@ def wl_colors(graph: GraphFrame, rounds: int = 2) -> DataFrame:
                 ).alias("c"),
             )
         )
-        _free_checkpoint(col)
-        col = new_col
+
+    col = fixpoint(col, step, rounds)
     return col.select(F.col("v").alias(VERTEX_ID), F.col("c").alias("wl_color"))
 
 
+@_scoped
 def densest_subgraph(
     graph: GraphFrame,
     epsilon_num: int = 1,
@@ -3758,44 +3726,26 @@ def densest_subgraph(
             f"{epsilon_num}/{epsilon_den}"
         )
     spark = graph.edges.sparkSession
-    und = (
-        graph.edges.select(
-            F.least(SUBJECT, OBJECT).alias("a"),
-            F.greatest(SUBJECT, OBJECT).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    und = truncate_plan(und)
+    und = truncate_plan(_und_simple(graph.edges))
     coef = 2 * (epsilon_den + epsilon_num)
 
-    def _degrees(e: DataFrame) -> DataFrame:
-        return (
-            e.select(F.col("a").alias(VERTEX_ID))
-            .unionAll(e.select(F.col("b")))
-            .groupBy(VERTEX_ID)
-            .agg(F.count(F.lit(1)).alias("degree"))
-        )
-
-    trace: list[tuple[int, int, int, float]] = []
-    best: DataFrame | None = None
-    best_density = -1.0
-    rnd = 0
-    while True:
-        deg = _degrees(und)
+    def measured(und, rnd, trace, best):
+        """The state after peel round ``rnd``: the subgraph, its degrees,
+        the trace so far and the densest ``(density, degrees)`` seen."""
+        deg = _und_degrees(und)
         # two O(1) scalars per round (V and E ride one count each)
         n_e = und.count()
         n_v = deg.count()
         density = 0.0 if n_v == 0 else round(n_e / n_v, 6)
-        trace.append((rnd, n_v, n_e, density))
-        if return_subgraph and density > best_density and n_v > 0:
-            if best is not None:
-                _free_checkpoint(best)
-            best = truncate_plan(deg)
-            best_density = density
-        if n_e == 0 or (max_rounds is not None and rnd >= max_rounds):
-            break
-        rnd += 1
+        if return_subgraph and density > best[0] and n_v > 0:
+            best = (density, truncate_plan(deg))
+        return und, deg, trace + [(rnd, n_v, n_e, density)], best
+
+    def step(state, rnd):
+        und, deg, trace, best = state
+        _, n_v, n_e, _ = trace[-1]
+        if n_e == 0:
+            return None
         # integer-exact batched peel: KEEP v iff deg·V·den > coef·E
         keep = deg.filter(
             F.col("degree").cast("decimal(38,0)")
@@ -3807,10 +3757,11 @@ def densest_subgraph(
         nxt = und.join(
             keep.select(F.col(VERTEX_ID).alias("a")), "a", "left_semi"
         ).join(keep.select(F.col(VERTEX_ID).alias("b")), "b", "left_semi")
-        nxt = truncate_plan(nxt)
-        _free_checkpoint(und)
-        und = nxt
-    _free_checkpoint(und)
+        return measured(truncate_plan(nxt), rnd, trace, best)
+
+    _, _, trace, (_, best) = fixpoint(
+        measured(und, 0, [], (-1.0, None)), step, max_rounds
+    )
     trace_df = spark.createDataFrame(
         trace, "peel_round int, n_vertices bigint, n_edges bigint, density double"
     )
@@ -3823,6 +3774,7 @@ def densest_subgraph(
     return trace_df
 
 
+@_scoped
 def node2vec_walks(
     graph: GraphFrame,
     length: int,
@@ -3874,103 +3826,75 @@ def node2vec_walks(
             f"integer weights must be >= 1, got "
             f"({w_return}, {w_near}, {w_far})"
         )
-    edges = graph.edges.select(SUBJECT, OBJECT).distinct()
-    nbr = truncate_plan(_neighbor_index(edges, nbr_buckets))
-    deg = truncate_plan(
-        edges.groupBy(F.col(SUBJECT).alias("deg_subject")).agg(
-            F.count(F.lit(1)).alias("out_degree")
-        )
-    )
+    edges, nbr, deg = _walk_tables(graph, nbr_buckets)
     flag = edges.select(
         F.col(SUBJECT).alias("__ps"),
         F.col(OBJECT).alias("__po"),
         F.lit(1).alias("__near"),
     )
-
     start_set = graph.vertices if starts is None else starts
-    state = start_set.select(
+    start = start_set.select(
         F.col(VERTEX_ID).alias("walk_id"),
         F.col(VERTEX_ID).alias("vertex_id"),
         F.lit(None).cast("long").alias("prev"),
         F.lit(0).alias("step"),
     )
-    frames = [state]
-    for t in range(1, length + 1):
+
+    def step(frames, t):
+        state = frames[-1]
         if t == 1:
-            j = state.join(
-                deg, state["vertex_id"] == deg["deg_subject"], "inner"
+            hop = _uniform_hop(state, nbr, deg, t, seed)
+            return frames + [
+                truncate_plan(
+                    hop.select(
+                        "walk_id",
+                        "vertex_id",
+                        F.col("cur").alias("prev"),
+                        F.lit(t).alias("step"),
+                    )
+                )
+            ]
+        cand = (
+            state.join(nbr, state["vertex_id"] == nbr["nbr_subject"], "inner")
+            .join(
+                flag,
+                (F.col("prev") == F.col("__ps"))
+                & (F.col("nbr_object") == F.col("__po")),
+                "left",
             )
-            pick = (
-                (F.col("walk_id").cast("long") % F.lit(1000003))
-                * F.lit(7919)
-                + (F.col("vertex_id").cast("long") % F.lit(999983))
-                * F.lit(104729)
-                + F.lit(t * 7919 + seed)
-            ) % F.col("out_degree")
-            j = j.select(
+            .select(
                 "walk_id",
+                F.col("prev"),
                 F.col("vertex_id").alias("cur"),
-                pick.alias("pick_idx"),
+                F.col("nbr_object").alias("nxt"),
+                "nbr_idx",
+                F.when(F.col("nbr_object") == F.col("prev"), F.lit(w_return))
+                .when(F.col("__near").isNotNull(), F.lit(w_near))
+                .otherwise(F.lit(w_far))
+                .cast("long")
+                .alias("w"),
             )
-            state = truncate_plan(
-                j.join(
-                    nbr,
-                    (j["cur"] == nbr["nbr_subject"])
-                    & (j["pick_idx"] == nbr["nbr_idx"]),
-                    "inner",
-                ).select(
-                    "walk_id",
-                    F.col("nbr_object").alias("vertex_id"),
-                    F.col("cur").alias("prev"),
-                    F.lit(t).alias("step"),
-                )
-            )
-        else:
-            cand = (
-                state.join(
-                    nbr, state["vertex_id"] == nbr["nbr_subject"], "inner"
-                )
-                .join(
-                    flag,
-                    (F.col("prev") == F.col("__ps"))
-                    & (F.col("nbr_object") == F.col("__po")),
-                    "left",
-                )
-                .select(
-                    "walk_id",
-                    F.col("prev"),
-                    F.col("vertex_id").alias("cur"),
-                    F.col("nbr_object").alias("nxt"),
-                    "nbr_idx",
-                    F.when(F.col("nbr_object") == F.col("prev"),
-                           F.lit(w_return))
-                    .when(F.col("__near").isNotNull(), F.lit(w_near))
-                    .otherwise(F.lit(w_far))
-                    .cast("long")
-                    .alias("w"),
-                )
-            )
-            wtot = Window.partitionBy("walk_id")
-            wcum = (
-                Window.partitionBy("walk_id")
-                .orderBy("nbr_idx")
-                .rowsBetween(Window.unboundedPreceding, -1)
-            )
-            r = (
-                (F.col("walk_id").cast("long") % F.lit(1000003))
-                * F.lit(7919)
-                + (F.col("cur").cast("long") % F.lit(999983))
-                * F.lit(104729)
-                + (F.col("prev").cast("long") % F.lit(999983)) * F.lit(31)
-                + F.lit(t * 7919 + seed)
-            ) % F.sum("w").over(wtot)
-            cand = cand.select(
-                "walk_id", "cur", "nxt",
-                F.coalesce(F.sum("w").over(wcum), F.lit(0)).alias("cb"),
-                F.col("w"),
-                r.alias("r"),
-            )
-            state = truncate_plan(
+        )
+        wtot = Window.partitionBy("walk_id")
+        wcum = (
+            Window.partitionBy("walk_id")
+            .orderBy("nbr_idx")
+            .rowsBetween(Window.unboundedPreceding, -1)
+        )
+        r = (
+            (F.col("walk_id").cast("long") % F.lit(1000003)) * F.lit(7919)
+            + (F.col("cur").cast("long") % F.lit(999983)) * F.lit(104729)
+            + (F.col("prev").cast("long") % F.lit(999983)) * F.lit(31)
+            + F.lit(t * 7919 + seed)
+        ) % F.sum("w").over(wtot)
+        cand = cand.select(
+            "walk_id", "cur", "nxt",
+            F.coalesce(F.sum("w").over(wcum), F.lit(0)).alias("cb"),
+            F.col("w"),
+            r.alias("r"),
+        )
+        return frames + [
+            truncate_plan(
                 cand.filter(
                     (F.col("cb") <= F.col("r"))
                     & (F.col("r") < F.col("cb") + F.col("w"))
@@ -3981,12 +3905,13 @@ def node2vec_walks(
                     F.lit(t).alias("step"),
                 )
             )
-        frames.append(state)
+        ]
 
-    out = frames[0].select("walk_id", "step", "vertex_id")
-    for f in frames[1:]:
-        out = out.unionAll(f.select("walk_id", "step", "vertex_id"))
-    return out
+    frames = fixpoint([start], step, length)
+    return functools.reduce(
+        DataFrame.unionAll,
+        [f.select("walk_id", "step", "vertex_id") for f in frames],
+    )
 
 
 def skipgram_pairs(walks: DataFrame, window: int = 2) -> DataFrame:
@@ -4117,6 +4042,7 @@ def powerlaw_alpha(
     )
 
 
+@_scoped
 def eigenvector_centrality(graph: GraphFrame, k: int = 3) -> DataFrame:
     """Truncated power-iteration eigenvector centrality (Bonacich 1972;
     the power method — public literature; no reference counterpart —
@@ -4133,32 +4059,28 @@ def eigenvector_centrality(graph: GraphFrame, k: int = 3) -> DataFrame:
     hub-heavy graphs (the bound is the documented contract, the same
     one as ``kmeans_assign``'s scaled-int sums).
 
-    Scale shape: k edge equi-joins + k vertex-keyed integer-sum aggs,
-    lineage truncated per step; one O(1) scalar action at the end.
+    Scale shape: k Pregel supersteps (sum-aggregated path counts along
+    out-edges); the total is one scalar aggregate over the final state.
     Returns ``(vertex_id, paths_k, score)``.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    e = graph.edges.select(SUBJECT, OBJECT)
-    x = graph.vertices.select(
-        VERTEX_ID, F.lit(1).cast("long").alias("x")
+    g = GraphFrame(
+        graph.vertices.select(VERTEX_ID),
+        graph.edges.select(SUBJECT, OBJECT),
+        closed=graph.closed,
     )
-    for _ in range(k):
-        nxt = (
-            e.join(
-                x.select(
-                    F.col(VERTEX_ID).alias("__u"), F.col("x").alias("__xu")
-                ),
-                e[SUBJECT] == F.col("__u"),
-            )
-            .groupBy(F.col(OBJECT).alias(VERTEX_ID))
-            .agg(F.sum("__xu").alias("x"))
-        )
-        x = truncate_plan(
-            graph.vertices.select(VERTEX_ID)
-            .join(nxt, VERTEX_ID, "left")
-            .select(VERTEX_ID, F.coalesce("x", F.lit(0)).alias("x"))
-        )
+    x = (
+        PregelBuilder(g)
+        .max_iterations(k)
+        .with_vertex_column("x")
+        .initial_message(F.lit(1).cast("long"))
+        .send_messages(MessageReceiver.OBJECT, subject("x"))
+        .aggregate_messages(F.sum(msg()))
+        .v_prog(F.coalesce(msg(), F.lit(0)))
+        .build()
+        .run()
+    )
     tot = x.agg(F.sum("x").alias("__t"))
     return (
         x.crossJoin(F.broadcast(tot))
@@ -4175,6 +4097,7 @@ def eigenvector_centrality(graph: GraphFrame, k: int = 3) -> DataFrame:
         )
     )
 
+@_scoped
 def louvain(graph: GraphFrame, rounds: int = 2) -> DataFrame:
     """One-level Louvain local moving (Blondel et al. 2008, "Fast
     unfolding of communities in large networks"; public literature — no
@@ -4216,10 +4139,8 @@ def louvain(graph: GraphFrame, rounds: int = 2) -> DataFrame:
     )
     deg = adj.groupBy("v").agg(F.count(F.lit(1)).alias("k"))
     m = und.agg(F.count(F.lit(1)).cast("long").alias("m"))
-    labels = graph.vertices.select(
-        VERTEX_ID, F.col(VERTEX_ID).alias("community")
-    )
-    for r in range(rounds):
+
+    def step(labels, rnd):
         lnb = labels.select(
             F.col(VERTEX_ID).alias("nb"), F.col("community").alias("c")
         )
@@ -4263,7 +4184,7 @@ def louvain(graph: GraphFrame, rounds: int = 2) -> DataFrame:
             .groupBy("v")
             .agg(F.min("c").alias("new_c"))
         )
-        labels = truncate_plan(
+        return truncate_plan(
             labels.join(
                 best, labels[VERTEX_ID] == best["v"], "left"
             ).select(
@@ -4273,7 +4194,7 @@ def louvain(graph: GraphFrame, rounds: int = 2) -> DataFrame:
                     # negative odd vertex id would yield -1 and never be
                     # eligible to move in any round (xxhash64 ids from the
                     # extraction pipeline ARE negative half the time)
-                    (F.pmod(F.col(VERTEX_ID), F.lit(2)) == r % 2)
+                    (F.pmod(F.col(VERTEX_ID), F.lit(2)) == (rnd - 1) % 2)
                     & F.col("new_c").isNotNull(),
                     F.col("new_c"),
                 )
@@ -4281,8 +4202,15 @@ def louvain(graph: GraphFrame, rounds: int = 2) -> DataFrame:
                 .alias("community"),
             )
         )
-    return labels
 
+    return fixpoint(
+        graph.vertices.select(VERTEX_ID, F.col(VERTEX_ID).alias("community")),
+        step,
+        rounds,
+    )
+
+
+@_scoped
 def opic(
     graph: GraphFrame,
     k: int = 3,
@@ -4319,6 +4247,7 @@ def opic(
     return state
 
 
+@_scoped
 def opic_state(
     graph: GraphFrame,
     k: int = 3,
@@ -4363,7 +4292,9 @@ def _opic_rounds(graph, k, scale, init):
     pot = state.sparkSession.range(1).select(
         F.lit(int(pot0)).cast("long").alias("__pot")
     )
-    for _ in range(k):
+
+    def step(state_pot, rnd):
+        state, pot = state_pot
         st = state.join(outd, state[VERTEX_ID] == outd["__v"], "left").select(
             VERTEX_ID,
             "history",
@@ -4410,7 +4341,7 @@ def _opic_rounds(graph, k, scale, init):
             F.expr("CAST(__p DIV __n AS BIGINT)").alias("__base"),
             F.expr("CAST(__p % __n AS BIGINT)").alias("__carry"),
         )
-        state = truncate_plan(
+        return truncate_plan(
             st.join(incoming, VERTEX_ID, "left")
             .crossJoin(F.broadcast(pot_split.select("__base")))
             .select(
@@ -4420,9 +4351,10 @@ def _opic_rounds(graph, k, scale, init):
                     F.coalesce("__in", F.lit(0)) + F.col("__base")
                 ).alias("cash"),
             )
-        )
-        pot = pot_split.select(F.col("__carry").alias("__pot"))
-    return state, pot
+        ), pot_split.select(F.col("__carry").alias("__pot"))
+
+    return fixpoint((state, pot), step, k)
+
 
 def triad_census(graph: GraphFrame) -> DataFrame:
     """Closed-triad census (Holland & Leinhardt 1970's M-A-N taxonomy,
@@ -4562,6 +4494,7 @@ def rich_club(
         ).alias("phi"),
     )
 
+@_scoped
 def edge_betweenness(
     graph: GraphFrame,
     sources: list[int],
@@ -4596,37 +4529,7 @@ def edge_betweenness(
     if scale < 1:
         raise ValueError(f"scale must be >= 1, got {scale}")
     spark = graph.edges.sparkSession
-    edges = truncate_plan(graph.edges.select(SUBJECT, OBJECT).distinct())
-    lvl0 = truncate_plan(
-        spark.createDataFrame(
-            [(int(s), int(s), 1) for s in sorted(set(sources))],
-            schema=f"{VERTEX_ID} long, src long, sigma long",
-        )
-    )
-    levels = [lvl0]
-    settled = lvl0.select(VERTEX_ID, "src")
-    for _hop in range(1, max_hops + 1):
-        prev = levels[-1]
-        msgs = prev.join(edges, prev[VERTEX_ID] == edges[SUBJECT]).select(
-            F.col(OBJECT).alias(VERTEX_ID),
-            prev["src"].alias("src"),
-            prev["sigma"].alias("sigma"),
-        )
-        nxt = (
-            msgs.groupBy(VERTEX_ID, "src")
-            .agg(F.sum("sigma").alias("sigma"))
-            .join(settled, [VERTEX_ID, "src"], "left_anti")
-        )
-        nxt = truncate_plan(nxt, observe={})
-        if nxt.observed["rows"] == 0:
-            _free_checkpoint(nxt)
-            break
-        levels.append(nxt)
-        new_settled = truncate_plan(
-            settled.unionByName(nxt.select(VERTEX_ID, "src"))
-        )
-        _free_checkpoint(settled)
-        settled = new_settled
+    edges, levels = _bfs_levels(graph, sources, max_hops)
     deepest = len(levels) - 1
     if deepest == 0:
         return spark.createDataFrame(

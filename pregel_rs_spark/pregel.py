@@ -49,10 +49,11 @@ Scale design (10^12-doc / 100 TB):
 from __future__ import annotations
 
 import inspect
-import os
-import sys
+import itertools
+import threading
 import time
 import warnings
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from enum import Enum
 from typing import Callable, Optional, Union
@@ -161,6 +162,9 @@ def truncate_plan(
     holds each named value plus ``rows``, the row count, so a loop learns
     "converged" or "empty" without a second Spark action.  ``{}`` observes
     the row count alone.  Without ``observe``, ``observed`` is None.
+
+    Inside a ``checkpoints()`` block the materialization registers with the
+    innermost scope, which frees it on exit unless the result keeps it.
 
     ``preserve_partitioning`` decides whether the rewrap ADVERTISES the
     checkpoint's hash partitioning to Catalyst:
@@ -296,10 +300,14 @@ def truncate_plan(
         out.observed = observed
         # Handle to the materialized blocks: DataFrame.unpersist() on the
         # rewrapped frame is a no-op (it was never cached through the
-        # CacheManager), so the loop frees the previous superstep's blocks
-        # through this RDD handle instead of waiting for the JVM GC /
-        # ContextCleaner to notice — keeps peak storage at ~2 states.
+        # CacheManager), so _free_checkpoint frees them through this RDD
+        # handle instead of waiting for the JVM GC / ContextCleaner.
         out._ck_rdd = lr.rdd()
+        scopes = _SCOPES.stack
+        if scopes:
+            out._ck_id = out._ck_rdd.id()
+            out._ck_reads = {out._ck_id}
+            scopes[-1].owned[out._ck_id] = out
         return out
     except Exception as ex:  # pragma: no cover - exercised only on Spark bumps
         # The rewrap touches Spark-internal constructors (LogicalRDD 9-arg,
@@ -325,6 +333,137 @@ def truncate_plan(
 
 
 _TRUNCATE_FALLBACK_WARNED = False
+
+
+def _free_checkpoint(df: DataFrame) -> None:
+    """Unpersist the blocks behind a ``truncate_plan`` frame now instead of
+    waiting for GC (no-op for other frames) and drop the frame from the
+    open ``checkpoints()`` scopes."""
+    rdd = getattr(df, "_ck_rdd", None)
+    if rdd is None:
+        return
+    for scope in _SCOPES.stack:
+        scope.owned.pop(getattr(df, "_ck_id", None), None)
+    try:
+        rdd.unpersist(False)
+    except Exception:
+        pass
+
+
+class _Scopes(threading.local):
+    """The calling thread's open ``checkpoints()`` scopes, innermost last."""
+
+    def __init__(self) -> None:
+        self.stack: list[_CheckpointScope] = []
+
+
+_SCOPES = _Scopes()
+
+
+def _reads(obj) -> set[int]:
+    """Ids of the RDDs that the frames in ``obj`` (a DataFrame, or a
+    tuple/list holding some among other values) scan: the ``LogicalRDD``
+    leaves of each analyzed plan.  Memoized on the frame, whose plan never
+    changes; analysis only, no Spark job."""
+    if isinstance(obj, (tuple, list)):
+        return set().union(*map(_reads, obj))
+    if not isinstance(obj, DataFrame):
+        return set()
+    ids = getattr(obj, "_ck_reads", None)
+    if ids is None:
+        ids = set()
+        leaves = obj._jdf.queryExecution().analyzed().collectLeaves().iterator()
+        while leaves.hasNext():
+            leaf = leaves.next()
+            if leaf.getClass().getSimpleName() == "LogicalRDD":
+                ids.add(leaf.rdd().id())
+        obj._ck_reads = ids
+    return ids
+
+
+class _CheckpointScope:
+    """The ``truncate_plan`` materializations of one ``checkpoints()``
+    block (RDD id → frame) and the ids its result keeps."""
+
+    def __init__(self) -> None:
+        self.owned: dict[int, DataFrame] = {}
+        self.kept: set[int] = set()
+
+    def keep(self, obj):
+        """Keep the checkpoints ``obj`` reads past the block; returns ``obj``."""
+        self.kept |= _reads(obj)
+        return obj
+
+
+@contextmanager
+def checkpoints():
+    """Scope the lifetime of the checkpoints this thread materializes.
+
+    Every ``truncate_plan`` inside the block registers with the innermost
+    open scope.  When the block exits, each registered checkpoint is
+    freed, except those that the frames passed to ``scope.keep`` read:
+    they move to the enclosing scope (or stay alive for the caller when
+    none is open).  An exception frees everything.  Outside any scope
+    ``truncate_plan`` registers nothing.
+
+    The scope is thread-local, so it must not stay open across a
+    ``yield``: the consumer's materializations would land in it."""
+    scope = _CheckpointScope()
+    stack = _SCOPES.stack
+    stack.append(scope)
+    ok = False
+    try:
+        yield scope
+        ok = True
+    finally:
+        stack.pop()
+        for rid, df in scope.owned.items():
+            if ok and rid in scope.kept:
+                if stack:
+                    stack[-1].owned[rid] = df
+            else:
+                _free_checkpoint(df)
+
+
+def fixpoint(state, step, max_rounds=None, converged=None, strict=False):
+    """Run ``state = step(state, rnd)`` for rounds 1, 2, … — the round
+    driver of the iterative algorithms.
+
+    ``state`` is a DataFrame or a tuple/list holding DataFrames among
+    other values.  Each round runs in a child ``checkpoints()`` scope that
+    keeps only what the new state reads; the checkpoints of the replaced
+    state that the caller's scope owns and the new state no longer reads
+    are then freed.  The driver materializes nothing itself: every
+    checkpoint comes from the step's own ``truncate_plan`` calls.
+
+    The loop stops when ``step`` returns None (the current state stands)
+    or ``converged(old, new)`` holds — a test over the frames' ``observed``
+    values, which costs no Spark job.  After ``max_rounds`` rounds (None:
+    no limit) it returns the state reached, or with ``strict`` raises the
+    one non-convergence error, naming the function the step belongs to.
+    """
+    rounds = itertools.count(1) if max_rounds is None else range(1, max_rounds + 1)
+    for rnd in rounds:
+        with checkpoints() as scope:
+            nxt = scope.keep(step(state, rnd))
+        if nxt is None:
+            return state
+        done = converged is not None and converged(state, nxt)
+        scopes = _SCOPES.stack
+        if scopes:
+            owned = scopes[-1].owned
+            for rid in _reads(state) - _reads(nxt):
+                if rid in owned:
+                    _free_checkpoint(owned[rid])
+        state = nxt
+        if done:
+            return state
+    if strict:
+        name = step.__qualname__.split(".")[0]
+        raise RuntimeError(
+            f"{name} did not converge in {max_rounds} rounds; raise max_rounds"
+        )
+    return state
 
 
 class MessageReceiver(Enum):
@@ -445,12 +584,6 @@ class Pregel:
     # All vertices still receive + run v_prog (NULL message if nothing
     # arrives) — this shrinks the send/shuffle side, not the state.
     active_filter: Optional[ExprLike] = None
-    # AQE inside the superstep loop (default off): the loop's partitioning
-    # is fixed and uniform per iteration, so adaptive re-planning only adds
-    # per-stage scheduling latency AND defeats exchange reuse; hub skew is
-    # handled by salting / map-side partial aggregation.  Opt back in for
-    # exploratory runs with wildly skewed unknown inputs.
-    adaptive: bool = False
     # reference Q1 emulation (pregel.rs:825-834): the reference aliases every
     # chained send to the same two output names, so only the FIRST send's
     # messages survive the select — opt in to reproduce that exactly.
@@ -517,8 +650,11 @@ class Pregel:
         # exchange); multi-executor runs re-exchange state each superstep
         # instead of remote-fetching checkpoint blocks — see truncate_plan.
         single_jvm = spark.sparkContext.master.startswith("local[")
-        prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.enabled", str(self.adaptive).lower())
+        # AQE off inside the loop: the partitioning is fixed and uniform per
+        # iteration, so adaptive re-planning only adds per-stage scheduling
+        # latency AND defeats exchange reuse (measured 2.6x slower); hub
+        # skew is handled by salting / map-side partial aggregation.
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
         # Join strategy inside the loop: every join is already co-partitioned
         # (pre-shuffled sorted edge cache; state partitioning preserved
         # through the checkpoint rewrap; aggregated messages come out of the
@@ -530,8 +666,8 @@ class Pregel:
         # ~5× superstep blowup) — so broadcasts are disabled for the loop
         # and restored after.  Forcing shuffled-hash was likewise tried and
         # rejected (multi-million-row hash build per superstep + JIT churn);
-        # plain sort-merge over the pre-sorted sides wins.
-        prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
+        # plain sort-merge over the pre-sorted sides wins.  run() restores
+        # both settings afterwards.
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
 
         # Edges: prefix once, repartition by the join key once, pre-sort
@@ -574,6 +710,7 @@ class Pregel:
                 ],
             )
         current = truncate_plan(current, preserve_partitioning=single_jvm)
+        ck = current  # the checkpoint behind ``current``
 
         state_cols = [c for c in current.columns]
 
@@ -889,11 +1026,9 @@ class Pregel:
                     }
 
                 # -- materialize: truncate lineage (≡ collect(), pregel.rs:867) --
-                t_plan = time.monotonic() - t0
                 nxt = truncate_plan(
                     nxt, preserve_partitioning=single_jvm, observe=observe
                 )
-                t_ck = time.monotonic() - t0 - t_plan
 
                 delta = None
                 changed = None
@@ -909,16 +1044,10 @@ class Pregel:
                         k: stats[f"__ss_{k}__"] for k in self.state_stats
                     }
 
-                prev = current
                 current = nxt.drop(*prev_names.values(), "__msg_cnt__")
-                current._ck_rdd = getattr(nxt, "_ck_rdd", None)
                 state_cols = current.columns
-                prev_rdd = getattr(prev, "_ck_rdd", None)
-                if prev_rdd is not None:
-                    try:
-                        prev_rdd.unpersist(False)
-                    except Exception:
-                        pass
+                _free_checkpoint(ck)
+                ck = nxt
 
                 self.metrics.append(
                     SuperstepMetrics(
@@ -930,13 +1059,6 @@ class Pregel:
                         messages=n_messages,
                     )
                 )
-                if os.environ.get("PREGEL_PROF"):
-                    rest = time.monotonic() - t0 - t_plan - t_ck
-                    print(
-                        f"[pregel-prof] step {iteration}: plan={t_plan:.2f}s "
-                        f"checkpoint={t_ck:.2f}s stats+rest={rest:.2f}s",
-                        file=sys.stderr,
-                    )
 
                 if self.checkpoint_store is not None and self.checkpoint_interval \
                         and iteration % self.checkpoint_interval == 0:
@@ -952,8 +1074,6 @@ class Pregel:
                 iteration += 1
         finally:
             edges.unpersist()
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
 
         if self.checkpoint_store is not None:
             self.checkpoint_store.write(
@@ -1029,12 +1149,6 @@ class PregelBuilder:
         pregel.rs:825-834).  Off by default — the default is union
         semantics, the documented divergence (SURVEY §5.3)."""
         self._p.first_send_only = on
-        return self
-
-    def with_adaptive(self, on: bool = True) -> "PregelBuilder":
-        """Re-enable AQE inside the superstep loop (off by default — see
-        ``Pregel.adaptive``)."""
-        self._p.adaptive = on
         return self
 
     def with_prepartitioned_edges(self, on: bool = True) -> "PregelBuilder":
